@@ -81,16 +81,22 @@ def main() -> None:
         elif args.probe_keys:
             probes = spark.createDataFrame(
                 [(k,) for k in args.probe_keys], f"{args.probe_col} string")
-            # inline keys arrive as strings; the state was built (and, for
-            # a bank, routed) in the BUILD column's type, so cast to the
-            # manifest's recorded route type — otherwise integer keys
-            # would hash in the string domain (broadcast path: all-False)
-            # or be refused by the bank's route-type guard
-            if manifest.route_types and \
-                    manifest.route_cols == [args.probe_col]:
+            # inline keys arrive as strings; cast them to the type their
+            # hash domain was built in, or integer keys would hash in the
+            # string domain (broadcast path: all-False) or be refused by
+            # the bank's route-type guard.  The merged filter holds the
+            # VALUE column's hashes; a bank routes by the route column.
+            # A manifest from before value_type still knows the value type
+            # when it was routed by the value column; else it skips the cast.
+            sharded = args.sharded or manifest.shard_sized
+            route_col = args.probe_col if sharded else manifest.value_col
+            cast = None if sharded else manifest.value_type
+            if not cast and manifest.route_types \
+                    and manifest.route_cols == [route_col]:
+                cast = manifest.route_types[0]
+            if cast:
                 probes = probes.withColumn(
-                    args.probe_col,
-                    F.col(args.probe_col).cast(manifest.route_types[0]))
+                    args.probe_col, F.col(args.probe_col).cast(cast))
         else:
             raise SystemExit("need --probe-parquet or --probe-keys")
 

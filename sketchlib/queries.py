@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from .agg import (
     bloom_contains_col,
     bloom_spec,
-    build_cms_weighted,
     build_sketch,
     cms_estimate_col,
     cms_spec,
@@ -435,7 +434,7 @@ def cms_heavy_suppliers_by_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey", F.col("l_quantity").cast("double").alias("qty"))
     total = li.agg(F.sum("qty")).collect()[0][0]
     thresh = math.ceil(_SUPP_PHI * total)
-    res = build_cms_weighted(li, "l_suppkey", "qty", cms_spec(d=5, w=4096))
+    res = build_sketch(li, ("l_suppkey", "qty"), cms_spec(d=5, w=4096))
     cand = (li.select("l_suppkey").distinct()
             .withColumn("est", cms_estimate_col(spark, res.state_bytes,
                                                 F.col("l_suppkey")))

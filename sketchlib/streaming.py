@@ -23,11 +23,10 @@ from __future__ import annotations
 import json
 import os
 import time
-from functools import reduce
 
 from pyspark.sql import DataFrame
 
-from .agg import SketchSpec, build_partials
+from .agg import SketchSpec, build_sketch
 
 __all__ = ["StreamingSketch", "StreamingGroupedSketch",
            "stateful_grouped_sketch"]
@@ -47,17 +46,23 @@ def stateful_grouped_sketch(stream_df: DataFrame, group_cols: list[str],
 
     Late/out-of-order rows are a non-event: update folds them into the
     group's running state whenever they arrive (the monoid property —
-    no watermark needed for correctness; add one to bound retention)."""
+    no watermark needed for correctness; add one to bound retention).
+
+    The one pandas stage left in the engine: pyspark has no Arrow variant
+    of applyInPandasWithState, so each group's rows arrive as pandas and
+    re-enter Arrow before the shared value conversion.  Caveat: pandas has
+    already promoted a nullable bigint column that holds a null to
+    float64, so in such a batch keys above 2^53 are rounded before they
+    are hashed — cast such keys to string upstream when that matters."""
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .agg import _series_values
+    from .agg import _arrow_values, _ddl
 
     ops = spec.ops
     gcols = list(group_cols)
-    fields = [f"`{f_.name}` {f_.dataType.simpleString()}"
-              for f_ in stream_df.select(*gcols).schema.fields]
-    out_schema = ", ".join(fields + ["state binary", "n bigint"])
+    out_schema = ", ".join(_ddl(stream_df, gcols) + ["state binary", "n bigint"])
     state_schema = "state binary, n bigint"
 
     def fold(key, pdfs, state):
@@ -67,7 +72,7 @@ def stateful_grouped_sketch(stream_df: DataFrame, group_cols: list[str],
         else:
             st, n = spec.create(), 0
         for pdf in pdfs:
-            vals = _series_values(pdf[value_col])
+            vals = _arrow_values(pa.Array.from_pandas(pdf[value_col]))
             st = ops.update(st, vals)
             n += len(vals)
         state.update((ops.serialize(st), n))
@@ -152,18 +157,17 @@ class StreamingSketch:
             return  # replayed micro-batch: already folded in, skip
         t0 = time.perf_counter()
         ops = self.spec.ops
-        rows = build_partials(batch_df, self.col, self.spec).collect()
-        if rows:
-            states = [ops.deserialize(bytes(r["state"])) for r in rows]
-            batch_state = reduce(ops.merge, states)
-            merged = ops.merge(ops.deserialize(self._state_bytes), batch_state)
-            self._state_bytes = ops.serialize(merged)
-            self.n_rows += sum(int(r["n"]) for r in rows)
+        # the shared build: partials tree-merge executor-side, so the
+        # driver folds <= fanout states, not one per partition
+        res = build_sketch(batch_df, self.col, self.spec)
+        merged = ops.merge(ops.deserialize(self._state_bytes), res.state)
+        self._state_bytes = ops.serialize(merged)
+        self.n_rows += res.n_rows
         self.last_batch_id = batch_id
         self.batches.append({
             "batch_id": batch_id,
-            "rows": sum(int(r["n"]) for r in rows) if rows else 0,
-            "partials": len(rows),
+            "rows": res.n_rows,
+            "partials": res.num_partials,
             "secs": round(time.perf_counter() - t0, 3),
         })
         self.batches_total += 1

@@ -88,3 +88,33 @@ def test_reusing_completed_checkpoint_is_marked(tmp_path):
     assert second["bloom_resumed"] is True
     assert second["rep_resumed"] == [True]
     assert "already complete" in err
+
+
+def test_inline_probe_keys_cast_to_value_type(spark, tmp_path):
+    """Inline --probe-keys arrive as strings.  On the merged (broadcast)
+    path they must hash in the BUILD value column's type, recorded in the
+    manifest as value_type — even when the checkpoint was routed by a
+    different column, whose type says nothing about the value domain."""
+    import json
+
+    from sketchlib.agg import bloom_spec
+    from sketchlib.checkpoint import checkpointed_build, load_manifest
+
+    keys = [10_000_019 * i for i in range(1, 41)]
+    df = spark.createDataFrame([(k, f"r{k % 7}") for k in keys],
+                               "k bigint, route string")
+    ck = str(tmp_path / "ck")
+    checkpointed_build(df, "k", bloom_spec(len(keys), 0.01),
+                       route_cols=["route"], num_shards=4, ckpt_dir=ck,
+                       shard_sized=False)
+    assert load_manifest(ck).value_type == "bigint"
+
+    query = os.path.join(os.path.dirname(JOB), "query_sketches.py")
+    out = str(tmp_path / "hits.parquet")
+    r = subprocess.run(
+        [sys.executable, query, "--checkpoint-dir", ck, "--probe-col", "k",
+         "--probe-keys", *map(str, keys), "--out", out],
+        capture_output=True, text=True, timeout=240)
+    assert r.returncode == 0, r.stderr[-2000:]
+    report = json.loads(r.stdout.strip().splitlines()[-1])
+    assert report["probes"] == report["members"] == len(keys)

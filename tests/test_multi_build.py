@@ -50,13 +50,11 @@ def test_multi_build_forced_shards(spark, sf_smoke):
 
 
 def test_weighted_cms_never_undercounts(spark, sf_smoke):
-    from sketchlib.agg import build_cms_weighted, cms_spec
     from sketchlib.sketch import CMS
     import numpy as np
 
     li = spark.read.parquet(f"{sf_smoke}/lineitem.parquet")
-    res = build_cms_weighted(li, "l_suppkey", "l_quantity",
-                             cms_spec(d=5, w=2048))
+    res = build_sketch(li, ("l_suppkey", "l_quantity"), cms_spec(d=5, w=2048))
     exact = {r["l_suppkey"]: r["q"] for r in
              li.groupBy("l_suppkey").agg(
                  F.sum("l_quantity").alias("q")).collect()}

@@ -5,10 +5,12 @@ partial-build fast path."""
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
 
-from sketchlib.agg import build_partials, hll_spec
+from sketchlib.agg import (bloom_spec, build_partials, cms_spec, hll_spec,
+                           kmv_spec)
 from sketchlib.queries import QUERIES
 
 
@@ -93,17 +95,76 @@ def test_mg_verify_filter_pushed_to_scan(spark, sf_test):
 
 
 def test_kmv_partials_zero_shuffle(spark, sf_test):
-    """kmv_bottomk ships only k-entry partials: the ACTUAL mapInPandas stage
-    kmv_bottomk builds (exposed as kmv_partials) runs on the scan
-    partitioning with no exchange before it."""
-    from sketchlib.agg import kmv_partials
-
+    """kmv_bottomk ships only k-entry partials: its (key, priority) input
+    runs through the shared mapInArrow partial builder on the scan
+    partitioning, with no exchange before it."""
     wp = spark.read.parquet(f"{sf_test}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("url"))
     pr = wp.withColumn("prio", F.pmod(F.xxhash64("url"), F.lit(2**40)))
-    plan = plan_of(kmv_partials(pr, "url", "prio", 64), "simple")
-    assert "MapInPandas" in plan
+    plan = plan_of(build_partials(pr, ("url", "prio"), kmv_spec(64)), "simple")
+    assert "MapInArrow" in plan
     assert "Exchange" not in plan
+
+
+def test_weighted_cms_partials_zero_shuffle(spark, sf_test):
+    """A weighted CMS (key, weight) input builds through the same shared
+    mapInArrow partial builder, with no exchange before it."""
+    li = spark.read.parquet(f"{sf_test}/lineitem.parquet")
+    plan = plan_of(build_partials(li, ("l_suppkey", "l_quantity"),
+                                  cms_spec(d=5, w=2048)), "simple")
+    assert "MapInArrow" in plan
+    assert "Exchange" not in plan
+
+
+def test_sketch_engine_plans_have_no_pandas_stage(spark, sf_test, tmp_path,
+                                                  monkeypatch):
+    """Values reach the kernels only through Arrow: no MapInPandas, no
+    FlatMapGroupsInPandas and no pandas scalar UDF (ArrowEvalPython with
+    the SQL_SCALAR_PANDAS_UDF eval type) anywhere in the sketch engine's
+    plans — builds, grouped builds, keyed checkpoint partials, the routed
+    bank probe and the broadcast probe."""
+    from pyspark.util import PythonEvalType
+
+    from sketchlib.agg import (bloom_contains_col, build_partials_keyed,
+                               build_sketches, sketch_grouped)
+    from sketchlib.checkpoint import checkpointed_build, sharded_contains
+
+    ev = spark.read.parquet(f"{sf_test}/events.parquet")
+    plans = []
+    frame_cls = type(ev)
+    collect = frame_cls.collect
+
+    def recording_collect(df):
+        plans.append(plan_of(df, "simple"))
+        return collect(df)
+
+    monkeypatch.setattr(frame_cls, "collect", recording_collect)
+    res = build_sketches(ev, [("user_id", bloom_spec(50_000)),
+                              ("user_id", hll_spec(p=12))],
+                         num_shards=4, fanout=2)
+    monkeypatch.undo()
+    assert any("MapInArrow" in p and "FlatMapGroupsInArrow" in p
+               for p in plans)
+
+    for strategy in ("shuffle", "local_combine"):
+        plans.append(plan_of(sketch_grouped(ev, ["event_type"], "user_id",
+                                            hll_spec(p=12),
+                                            strategy=strategy), "simple"))
+    plans.append(plan_of(build_partials_keyed(ev, "user_id", hll_spec(p=12),
+                                              ["user_id"], 4), "simple"))
+    ckpt = str(tmp_path / "bank")
+    checkpointed_build(ev, "user_id", bloom_spec(50_000), route_cols=["user_id"],
+                       num_shards=4, ckpt_dir=ckpt, shard_sized=True)
+    plans.append(plan_of(sharded_contains(ev, "user_id", ckpt), "simple"))
+    plans.append(plan_of(ev.where(bloom_contains_col(
+        spark, res[0].state_bytes, F.col("user_id"))), "simple"))
+
+    pandas_udf = re.compile(
+        rf"ArrowEvalPython \[.*\], \[.*\], {PythonEvalType.SQL_SCALAR_PANDAS_UDF}\b")
+    for plan in plans:
+        assert "MapInPandas" not in plan, plan
+        assert "FlatMapGroupsInPandas" not in plan, plan
+        assert not pandas_udf.search(plan), plan
 
 
 def test_kmv_negative_priority_rejected(spark, sf_test):

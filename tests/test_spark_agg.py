@@ -53,27 +53,53 @@ class TestBloomEndToEnd:
         # FK-clean: every o_custkey is a real customer => all present
         assert hit.where(~F.col("hit")).count() == 0
 
-    def test_nullable_long_key_no_false_negatives(self, spark):
-        """Regression: pandas promotes a nullable LongType batch to float64
-        (null -> NaN), which used to hash in a DIFFERENT domain than a
-        null-free int64 batch — the same key false-negatived depending on
-        whether its Arrow batch happened to contain a null.  The per-value
-        canonical rule (hashing.numeric_byte_matrix) makes build and probe
-        dtype- and batch-insensitive."""
-        rows = [(i if i % 7 else None,) for i in range(1, 4_001)]
-        df = spark.createDataFrame(rows, "k long").repartition(8)
+    @pytest.mark.parametrize("base, step", [(1, 1), (2**53 + 1, 4)],
+                             ids=["small", "above_2p53"])
+    def test_nullable_long_key_no_false_negatives(self, spark, tmp_path,
+                                                  base, step):
+        """Regression: a pandas batch promotes a nullable LongType column
+        to float64 (null -> NaN), which rounds keys above 2^53 — so a
+        probe batch holding a null false-negatived large members, and a
+        keyed checkpoint build hashed a different key set than the Arrow
+        build.  Every build and probe path now reads the column through
+        Arrow's validity bitmap, keeping int64 keys exact.
+
+        False negatives are counted with an aggregate: a `k IS NOT NULL`
+        filter would be pushed below the UDF and no probe batch would
+        ever hold a null."""
+        from sketchlib.checkpoint import checkpointed_build, sharded_contains
+
+        rows = [(base + step * i if i % 5 else None,) for i in range(1, 2_001)]
+        df = spark.createDataFrame(rows, "k long").repartition(4)
         n_real = sum(1 for (v,) in rows if v is not None)
-        res = build_sketch(df, "k", bloom_spec(n_real, 0.01))
+        spec = bloom_spec(n_real, 0.01)
+        res = build_sketch(df, "k", spec)
         assert res.n_rows == n_real  # nulls contribute nothing
-        probed = df.withColumn(
-            "hit", bloom_contains_col(spark, res.state_bytes, F.col("k")))
-        # every real key present; null keys probe as not-member, not a crash
-        assert probed.where(F.col("k").isNotNull() & ~F.col("hit")).count() == 0
-        assert probed.where(F.col("k").isNull() & F.col("hit")).count() == 0
+
+        def misses(hit):
+            # (real keys probed not-member, null keys probed member)
+            k = F.col("k")
+            return tuple(df.withColumn("hit", hit).agg(
+                F.sum((k.isNotNull() & ~F.col("hit")).cast("long")),
+                F.sum((k.isNull() & F.col("hit")).cast("long"))).first())
+
+        assert misses(bloom_contains_col(spark, res.state_bytes,
+                                         F.col("k"))) == (0, 0)
         # the same state built from a null-free frame is byte-identical
-        clean = build_sketch(df.where(F.col("k").isNotNull()), "k",
-                             bloom_spec(n_real, 0.01))
+        clean = build_sketch(df.where(F.col("k").isNotNull()), "k", spec)
         assert clean.state_bytes == res.state_bytes
+        # the keyed checkpoint build hashes the same keys as the Arrow build
+        ckpt = checkpointed_build(df, "k", spec, route_cols=["k"],
+                                  num_shards=4, shard_sized=False,
+                                  ckpt_dir=str(tmp_path / "merged"))
+        assert ckpt.state_bytes == res.state_bytes
+        # and the routed bank probe finds every member
+        bank_dir = str(tmp_path / "bank")
+        checkpointed_build(df, "k", spec, route_cols=["k"], num_shards=4,
+                           shard_sized=True, ckpt_dir=bank_dir)
+        fn = sharded_contains(df, "k", bank_dir).agg(F.sum(
+            (F.col("k").isNotNull() & ~F.col("member")).cast("long"))).first()[0]
+        assert fn == 0
 
     def test_double_key_probe_matches_build_domain(self, spark):
         """Regression: bloom_contains_col coerced every numeric probe to
@@ -109,24 +135,22 @@ class TestBloomEndToEnd:
             assert r["est"] >= true_counts[r["k"]]
 
     def test_binary_column_non_utf8_build_and_probe(self, spark):
-        """Regression: object-dtype pandas batches (BinaryType columns)
-        were forced through pa.large_string, whose utf8 validation crashed
-        the task on any non-UTF8 payload — so grouped sketches and probes
-        over raw-bytes columns (WARC payloads, hashes) died while the
-        mapInArrow build path handled the same column fine.  Also pins
-        cross-path domain agreement: a Bloom built via the Arrow path
-        answers True for every key probed via the pandas path."""
+        """Regression: BinaryType columns once went through a utf8-validating
+        string cast, which crashed the task on any non-UTF8 payload — so
+        grouped sketches and probes over raw-bytes columns (WARC payloads,
+        hashes) died.  Also pins domain agreement between the build, the
+        broadcast probe and the grouped build over the same column."""
         rows = [(i % 3, bytes([0xFF, 0xFE, i % 251]) + f"k{i}".encode())
                 for i in range(600)]
         df = spark.createDataFrame(rows, "g int, payload binary")
         # Arrow build path over binary keys
         res = build_sketch(df, "payload", bloom_spec(600, 0.01))
         assert res.n_rows == 600
-        # pandas probe path over the same binary column: zero FN
+        # broadcast probe over the same binary column: zero FN
         probed = df.withColumn(
             "hit", bloom_contains_col(spark, res.state_bytes, F.col("payload")))
         assert probed.where(~F.col("hit")).count() == 0
-        # pandas build path (grouped salted strategy) over binary values
+        # grouped salted strategy over binary values
         from sketchlib.agg import sketch_grouped
         from sketchlib.sketch import HLL
         grouped = sketch_grouped(df, ["g"], "payload", hll_spec(p=12))

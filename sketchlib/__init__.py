@@ -3,7 +3,8 @@ library (brand-new, Spark-first; capabilities of f0t1h/bloomfilter
 generalized to Bloom / HLL / count-min / KLL / t-digest per BASELINE.json).
 
 Layers:
-  sketchlib.hashing   — vectorized MurmurHash3-32 kernel + derived families
+  sketchlib.hashing   — the XXH64 key-hash domain (= Spark xxhash64) +
+                        derived families
   sketchlib.params    — sizing math (standard Bloom formula)
   sketchlib.sketch    — the five mergeable sketch kernels (pure numpy)
   sketchlib.agg       — the Spark aggregation engine (partials -> tree merge)

@@ -26,6 +26,13 @@ pandas batch would round nullable bigint keys above 2^53); partials come
 only from ``_partial_builder``; states merge only through
 ``merge_states`` (executor) and ``_fold`` (driver, ≤ fanout rows); probes
 are one ``F.arrow_udf`` factory, ``_probe_col``.
+
+Keys are hashed once, in the JVM: Bloom, HLL and CMS (``HASHED_KINDS``)
+receive one ``key_hash`` bigint column per distinct key column — Spark's
+``xxhash64`` of the canonical key, the domain of ``hashing.hash64`` —
+instead of the key (the reference hashes once and reuses the hash for
+routing and insert, simple_benchmark.cpp:246-251).  MG, KMV, KLL and
+t-digest keep receiving values.
 """
 
 from __future__ import annotations
@@ -40,9 +47,12 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BooleanType, LongType
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import (BooleanType, ByteType, DataType, DecimalType,
+                               DoubleType, FloatType, IntegerType, LongType,
+                               ShortType)
 
+from .hashing import hash64, split64
 from .params import BloomParams
 from .sketch import KINDS, deserialize_any, peek_kind
 
@@ -54,6 +64,7 @@ __all__ = [
     "bloom_prune_join", "weighted_sample", "grouped_bottomk",
     "sketch_grouped", "rollup_states", "sketch_grouped_rollup",
     "bloom_contains_col", "cms_estimate_col", "BuildResult",
+    "HASHED_KINDS", "key_hash",
 ]
 
 
@@ -179,17 +190,64 @@ def _ddl(df: DataFrame, cols: list[str]) -> list[str]:
 #: kinds taking an auxiliary column, and its type: CMS a weight, KMV a priority
 _AUX_TYPES = {"cms": "double", "kmv": "long"}
 
+#: kinds whose kernels take key hashes, not keys: they get ``key_hash``
+HASHED_KINDS = frozenset({"bloom", "hll", "cms"})
 
-def _update(spec: SketchSpec, state, key, aux=None):
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+_FRACTIONAL = (FloatType, DoubleType, DecimalType)
+
+
+def key_hash(col: Column, dtype: DataType) -> Column:
+    """The canonical key hash of a column of type ``dtype`` as a Catalyst
+    expression: bigint ``xxhash64`` (seed 42) of the key's canonical
+    form, null for a null or NaN key — bit-equal to ``hashing.hash64``
+    of the same values.  Integers and integral in-range doubles (and
+    floats, decimals) hash as bigint, other doubles as their IEEE bits;
+    strings, binary, booleans, dates and timestamps as Spark hashes
+    them."""
+    if isinstance(dtype, _INTEGRAL):
+        h = F.xxhash64(col.cast("bigint"))
+    elif isinstance(dtype, _FRACTIONAL):
+        d = col.cast("double")
+        integral = ((F.rint(d) == d) & (d >= F.lit(-2.0 ** 63))
+                    & (d < F.lit(2.0 ** 63)))
+        h = F.when(~F.isnan(d), F.when(integral, F.xxhash64(d.cast("bigint")))
+                   .otherwise(F.xxhash64(d)))
+    else:
+        h = F.xxhash64(col)
+    return F.when(col.isNotNull(), h)
+
+
+def _hashes(arr) -> np.ndarray:
+    """A null-free int64 Arrow hash column -> uint64 numpy."""
+    return arr.to_numpy(zero_copy_only=False).view(np.uint64)
+
+
+def _insert_hashes(spec: SketchSpec, state, h: np.ndarray, aux=None):
+    """A hashed kind's insert of uint64 key hashes: Bloom's h1/h2 are
+    their low/high halves, HLL and CMS take all 64 bits."""
+    if spec.kind == "bloom":
+        return spec.ops.update_hashes(state, *split64(h))
+    if spec.kind == "cms":
+        return spec.ops.update_hashes(state, h, aux)
+    return spec.ops.update_hashes(state, h)
+
+
+def _update(spec: SketchSpec, state, key, aux=None, hashed: bool = False):
     """Fold one Arrow column (and its aux column) into ``state``; returns
-    (state, rows folded).  A null in either column drops the row."""
-    if aux is None:
+    (state, rows folded).  ``key`` holds values, or with ``hashed`` their
+    ``key_hash``.  A null in either column drops the row."""
+    if aux is None and not hashed:
         vals = _arrow_values(key)
         return spec.ops.update(state, vals), len(vals)
-    keep = pa.array(_kept(key) & _kept(aux))
-    key, aux = key.filter(keep), aux.filter(keep).to_numpy(zero_copy_only=False)
-    if spec.kind == "cms":
-        return spec.ops.update(state, _arrow_values(key), aux), len(key)
+    if aux is None:
+        key = key.drop_null() if key.null_count else key
+    else:
+        keep = pa.array(_kept(key) & _kept(aux))
+        key = key.filter(keep)
+        aux = aux.filter(keep).to_numpy(zero_copy_only=False)
+    if hashed:
+        return _insert_hashes(spec, state, _hashes(key), aux), len(key)
     # KMV orders priorities as uint64: a negative one would silently sort
     # opposite to the documented 'ORDER BY prio LIMIT k' contract
     if (aux < 0).any():
@@ -199,20 +257,36 @@ def _update(spec: SketchSpec, state, key, aux=None):
                                        key.to_pylist()), len(key))
 
 
-def _select(df: DataFrame, inputs: list, *extra) -> DataFrame:
-    """The builder's input columns: ``__k{i}`` per input, plus ``__a{i}``
-    (cast to the kind's aux type) for a ``(key_col, aux_col)`` pair."""
-    cols = []
+def _layout(inputs: list) -> list[tuple]:
+    """Per input: (key column, builder column, aux column, builder aux
+    column).  Each distinct key column crosses to Python once: as one
+    ``__h{j}`` key_hash for the hashed kinds, as one ``__k{j}`` of values
+    for the others; aux columns are ``__a{i}``."""
+    out, names = [], {}
     for i, (col, spec) in enumerate(inputs):
         key, aux = col if isinstance(col, tuple) else (col, None)
-        cols.append(F.col(key).alias(f"__k{i}"))
+        if aux is not None and spec.kind not in _AUX_TYPES:
+            raise ValueError(f"{spec.kind} takes no auxiliary column; "
+                             f"only {sorted(_AUX_TYPES)} do")
+        prefix = "__h" if spec.kind in HASHED_KINDS else "__k"
+        name = names.setdefault((prefix, key), f"{prefix}{len(names)}")
+        out.append((key, name, aux, None if aux is None else f"__a{i}"))
+    return out
+
+
+def _select(df: DataFrame, inputs: list, *extra) -> DataFrame:
+    """The builder's input columns (see ``_layout``): one ``key_hash``
+    per distinct key column of the hashed kinds, values for the others,
+    aux columns cast to the kind's aux type."""
+    cols = {}
+    for (key, name, aux, aux_name), (_, spec) in zip(_layout(inputs), inputs):
+        if name not in cols:
+            cols[name] = (key_hash(F.col(key), df.select(key).schema[0].dataType)
+                          if name.startswith("__h") else F.col(key)).alias(name)
         if aux is not None:
-            if spec.kind not in _AUX_TYPES:
-                raise ValueError(f"{spec.kind} takes no auxiliary column; "
-                                 f"only {sorted(_AUX_TYPES)} do")
-            cols.append(F.col(aux).cast(_AUX_TYPES[spec.kind])
-                        .alias(f"__a{i}"))
-    return df.select(*cols, *extra)
+            cols[aux_name] = F.col(aux).cast(_AUX_TYPES[spec.kind]) \
+                .alias(aux_name)
+    return df.select(*cols.values(), *extra)
 
 
 def _partial_builder(inputs: list):
@@ -220,16 +294,17 @@ def _partial_builder(inputs: list):
     state, n) batch, one serialized state per input.  Run by mapInArrow
     (shard = partition id) and by the keyed applyInArrow (shard = group)."""
     specs = [spec for _, spec in inputs]
-    has_aux = [isinstance(col, tuple) for col, _ in inputs]
+    layout = _layout(inputs)
 
     def build(batches, shard: int) -> pa.RecordBatch:
         states = [s.create() for s in specs]
         ns = [0] * len(specs)
         for rb in batches:
-            for i, spec in enumerate(specs):
-                aux = rb.column(f"__a{i}") if has_aux[i] else None
-                states[i], n = _update(spec, states[i],
-                                       rb.column(f"__k{i}"), aux)
+            for i, (spec, (_, name, _, aux)) in enumerate(zip(specs, layout)):
+                states[i], n = _update(
+                    spec, states[i], rb.column(name),
+                    rb.column(aux) if aux else None,
+                    hashed=spec.kind in HASHED_KINDS)
                 ns[i] += n
         return pa.RecordBatch.from_pydict({
             "idx": pa.array(range(len(specs)), pa.int32()),
@@ -279,7 +354,11 @@ def build_partials(df: DataFrame, col, spec: SketchSpec,
 def shard_expr(route_cols: list[str], num_shards: int, seed: int = 17):
     """Deterministic shard id as a *data* function (O9's
     ``(h >> 16) & (S-1)`` analogue): pmod(xxhash64(cols..., seed), S).
-    Route by a high-cardinality column (e.g. url): that is the salting."""
+    Route by a high-cardinality column (e.g. url): that is the salting.
+    ``seed`` is not an XXH64 seed — Spark's ``xxhash64`` always seeds
+    with 42 — but one more hashed column, a literal that makes the route
+    hash differ from the sketches' ``key_hash`` of the same column (so a
+    shard's keys are not correlated with their Bloom bits)."""
     return F.pmod(F.xxhash64(*[F.col(c) for c in route_cols], F.lit(seed)),
                   F.lit(num_shards)).cast("long")
 
@@ -298,9 +377,10 @@ def build_partials_keyed(df: DataFrame, col: str, spec: SketchSpec,
     if shards_to_build is not None:
         sel = sel.where(F.col("shard").isin([int(s) for s in shards_to_build]))
     build = _partial_builder(inputs)
+    name = _layout(inputs)[0][1]
 
     def by_shard(key, table):
-        rows = table.select(["__k0"]).sort_by("__k0")
+        rows = table.select([name]).sort_by(name)
         return pa.Table.from_batches([build(rows.to_batches(),
                                             key[0].as_py())])
 
@@ -711,30 +791,57 @@ def _memo_deserialize(ops, buf: bytes):
     return state
 
 
-#: kind -> (query method, Spark return type, numpy answer dtype); rows
-#: without a value (null key, NaN double) get the zero answer
-_PROBES = {"bloom": ("contains", BooleanType(), np.bool_),
-           "cms": ("estimate", LongType(), np.int64)}
+#: kind -> (Spark return type, numpy answer dtype); rows without a key
+#: (null, NaN double) get the zero answer
+_PROBES = {"bloom": (BooleanType(), np.bool_),
+           "cms": (LongType(), np.int64)}
+
+#: ``typeof`` of the column types whose key_hash is not their plain
+#: xxhash64 (integers and fractionals canonicalize through bigint/double)
+_NUMERIC_TYPEOF = r"^(tinyint|smallint|int|bigint|float|double|decimal\(.*)$"
+
+
+def _query_hashes(kind: str, ops, state, h: np.ndarray) -> np.ndarray:
+    """A probe kind's answers for uint64 key hashes (see _insert_hashes)."""
+    if kind == "bloom":
+        return ops.contains_hashes(state, *split64(h))
+    return ops.estimate_hashes(state, h)
 
 
 def _probe_col(spark, state_bytes: bytes, col, kind: str):
     """The one probe factory: an Arrow UDF answering ``kind``'s query for
     each row of ``col`` against a broadcast state (shipped once per
-    executor, deserialized once per worker), through the build's own
-    ``_arrow_values`` — so build and probe hash keys in one domain."""
+    executor, deserialized once per worker), in the build's hash domain.
+
+    The column's type is not known here, and a cast that does not apply
+    to it (binary or date to bigint) fails analysis even in a dead CASE
+    branch.  So the UDF gets two arguments whose ``typeof`` tests fold at
+    plan time: the JVM ``xxhash64`` of a non-numeric key (its key_hash),
+    and the raw value of a numeric one, which ``hash64`` canonicalizes
+    (8-byte keys: cheap).  For a string column the second argument is a
+    null constant, so only the hash crosses to Python."""
     bc = spark.sparkContext.broadcast(state_bytes)
-    method, return_type, dtype = _PROBES[kind]
+    return_type, dtype = _PROBES[kind]
+    numeric = F.typeof(col).rlike(_NUMERIC_TYPEOF)
 
     @F.arrow_udf(return_type)
-    def probe(arr: pa.Array) -> pa.Array:
+    def probe(h: pa.Array, v: pa.Array) -> pa.Array:
         from .sketch import KINDS
         ops = KINDS[kind]
         state = _memo_deserialize(ops, bc.value)
-        out = np.zeros(len(arr), dtype)
-        out[_kept(arr)] = getattr(ops, method)(state, _arrow_values(arr))
+        out = np.zeros(len(h), dtype)
+        if pa.types.is_integer(v.type) or pa.types.is_floating(v.type) \
+                or pa.types.is_decimal(v.type):
+            keep = _kept(v)
+            hashes = hash64(v.filter(pa.array(keep)))
+        else:
+            keep = _kept(h)
+            hashes = _hashes(h.drop_null())
+        out[keep] = _query_hashes(kind, ops, state, hashes)
         return pa.array(out)
 
-    return probe(col)
+    return probe(F.when(~numeric & col.isNotNull(), F.xxhash64(col)),
+                 F.when(numeric, col))
 
 
 def bloom_contains_col(spark, state_bytes: bytes, col):

@@ -44,9 +44,11 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .agg import (PARTIAL_SCHEMA, BuildResult, SketchSpec, _arrow_values,
-                  _ddl, _fold, _kept, _memo_deserialize, _utc,
-                  build_partials_keyed, shard_expr, tree_merge)
+from .agg import (PARTIAL_SCHEMA, BuildResult, SketchSpec, _ddl, _fold,
+                  _hashes, _kept, _memo_deserialize, _query_hashes, _utc,
+                  build_partials_keyed, key_hash, shard_expr, tree_merge)
+from .hashing import HASH_DOMAIN, check_domain
+from .sketch import HASH_DOMAIN_KINDS
 
 __all__ = ["checkpointed_build", "load_manifest", "CheckpointState",
            "sharded_contains", "ShardedBloomBank", "prefer_shard_sized"]
@@ -109,6 +111,10 @@ class CheckpointState:
     #: of the merged filter, which inline probe keys are cast to.  None on
     #: pre-field manifests.
     value_type: str | None = None
+    #: ``hashing.HASH_DOMAIN`` the shard states were built in; None on
+    #: manifests from before the XXH64 domain (murmur3), refused for the
+    #: hashed kinds by :meth:`check_domain`
+    hash_domain: str | None = None
 
     @property
     def done(self) -> set[int]:
@@ -128,6 +134,13 @@ class CheckpointState:
                 and self.value_col == value_col
                 and self.shard_sized == shard_sized)
 
+    def check_domain(self, ckpt_dir: str) -> None:
+        """Refuse to resume or probe shards hashed in another domain:
+        fresh shards would mix two hash functions in one filter."""
+        if self.spec_kind in HASH_DOMAIN_KINDS:
+            check_domain(self.spec_kind, {"hd": self.hash_domain},
+                         f"checkpoint at {ckpt_dir}: ")
+
 
 def load_manifest(ckpt_dir: str) -> CheckpointState | None:
     path = os.path.join(ckpt_dir, _MANIFEST)
@@ -142,7 +155,8 @@ def load_manifest(ckpt_dir: str) -> CheckpointState | None:
         rounds=raw.get("rounds", []),
         shard_sized=raw.get("shard_sized", False),
         route_types=raw.get("route_types"),
-        value_type=raw.get("value_type"))
+        value_type=raw.get("value_type"),
+        hash_domain=raw.get("hash_domain"))
 
 
 def _save_manifest(ckpt_dir: str, state: CheckpointState) -> None:
@@ -249,6 +263,8 @@ def checkpointed_build(df: DataFrame, col: str, spec: SketchSpec, *,
             spec, num_shards, route_cols, col, shard_sized):
         raise ValueError(f"checkpoint at {ckpt_dir} was written for a "
                          f"different spec/shard plan; refusing to mix")
+    if state is not None:
+        state.check_domain(ckpt_dir)
     if state is not None and state.route_types is not None \
             and state.route_types != cur_types:
         # xxhash64 routing is type-sensitive: resuming with a retyped frame
@@ -263,7 +279,8 @@ def checkpointed_build(df: DataFrame, col: str, spec: SketchSpec, *,
                                 list(route_cols), col,
                                 shard_sized=shard_sized,
                                 route_types=cur_types,
-                                value_type=dtypes[col])
+                                value_type=dtypes[col],
+                                hash_domain=HASH_DOMAIN)
 
     missing = sorted(state.missing)
     if missing:
@@ -340,6 +357,7 @@ def sharded_contains(probes: DataFrame, probe_col: str,
         raise ValueError(f"checkpoint at {ckpt_dir} is missing or incomplete")
     if manifest.spec_kind != "bloom":
         raise ValueError("sharded_contains probes bloom checkpoints only")
+    manifest.check_domain(ckpt_dir)
     if manifest.route_cols != [probe_col]:
         raise ValueError(
             f"checkpoint routed by {manifest.route_cols}, probing by "
@@ -361,8 +379,10 @@ def sharded_contains(probes: DataFrame, probe_col: str,
 
     states = (_committed_states(spark, ckpt_dir, manifest)
               .withColumnRenamed("shard", "__shard"))
+    # each probe row carries its key_hash: Python never hashes the keys
     routed = probes.withColumn(
-        "__shard", shard_expr([probe_col], manifest.num_shards))
+        "__shard", shard_expr([probe_col], manifest.num_shards)).withColumn(
+        "__h", key_hash(F.col(probe_col), probes.schema[probe_col].dataType))
     # NO broadcast of the states side (round-1 verdict finding #2): at
     # 10^12 keys the blobs together ARE the merged filter (~TBs), and the
     # groupBy("__shard") below shuffles probes by shard anyway — a shuffle
@@ -384,10 +404,11 @@ def sharded_contains(probes: DataFrame, probe_col: str,
             # and blob-size-insensitive, matching the broadcast path's
             # guarantee (round-4 verdict residual #3)
             st = _memo_deserialize(ops, blob)
-            keys = table.column(probe_col)
-            member[_kept(keys)] = ops.contains(st, _arrow_values(keys))
-        return _utc(table.drop_columns(["state", "__shard"])).append_column(
-            "member", pa.array(member))
+            h = table.column("__h").combine_chunks()
+            member[_kept(h)] = _query_hashes("bloom", ops, st,
+                                             _hashes(h.drop_null()))
+        return _utc(table.drop_columns(["state", "__shard", "__h"])) \
+            .append_column("member", pa.array(member))
 
     return joined.groupBy("__shard").applyInArrow(probe_group, out_schema)
 

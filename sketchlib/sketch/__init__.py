@@ -15,6 +15,9 @@ from .protocol import pack_state, peek_kind, unpack_state
 from .tdigest import TDIGEST, TDigest, TDigestState
 
 KINDS = {s.name: s for s in (BLOOM, HLL, CMS, KLL, TDIGEST, MG, KMV)}
+#: kinds whose states hold key hashes: their headers carry the hash domain
+#: and a state from another domain is refused (``hashing.check_domain``)
+HASH_DOMAIN_KINDS = frozenset({"bloom", "hll", "cms", "kmv"})
 
 
 def deserialize_any(data: bytes):
@@ -31,6 +34,6 @@ __all__ = [
     "KMV", "Kmv", "KmvState",
     "MG", "Mg", "MgState",
     "TDIGEST", "TDigest", "TDigestState",
-    "KINDS", "deserialize_any",
+    "KINDS", "HASH_DOMAIN_KINDS", "deserialize_any",
     "pack_state", "unpack_state", "peek_kind",
 ]

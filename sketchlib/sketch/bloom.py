@@ -44,7 +44,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from ..hashing import hash_pair, splitmix64
+from ..hashing import HASH_DOMAIN, check_domain, hash_pair, splitmix64
 from ..params import BloomParams, fpp_bound
 from .protocol import pack_state, unpack_state
 
@@ -339,7 +339,8 @@ class Bloom:
     def serialize(self, state: BloomState) -> bytes:
         header = {"m": state.m_bits, "k": state.k,
                   "n": state.n_inserted, "blocked": int(state.blocked),
-                  "bb": state.block_bits, "pat": int(state.pattern)}
+                  "bb": state.block_bits, "pat": int(state.pattern),
+                  "hd": HASH_DOMAIN}
         if state.pattern:
             header["pv"] = _PATTERN_TABLE_VERSION
         elif state.blocked:
@@ -366,6 +367,7 @@ class Bloom:
                     f"this build probes with v{_BLOCK_LAYOUT_VERSION} — "
                     "probing would silently false-negative, rebuild the "
                     "state")
+        check_domain(kind, header)
         return BloomState(header["m"], header["k"],
                           bufs[0].astype(np.uint64, copy=False),
                           header["n"],

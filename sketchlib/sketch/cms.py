@@ -23,7 +23,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from ..hashing import derive_hashes, hash64
+from ..hashing import HASH_DOMAIN, check_domain, derive_hashes, hash64
 from .protocol import pack_state, unpack_state
 
 __all__ = ["CmsState", "Cms", "CMS"]
@@ -120,15 +120,17 @@ class Cms:
 
     def serialize(self, state: CmsState) -> bytes:
         return pack_state(self.name,
-                          {"d": state.d, "w": state.w, "n": state.n_total},
+                          {"d": state.d, "w": state.w, "n": state.n_total,
+                           "hd": HASH_DOMAIN},
                           [state.table.ravel()])
 
     def deserialize(self, data: bytes) -> CmsState:
         kind, header, bufs = unpack_state(data)
         if kind != self.name:
             raise ValueError(f"expected cms blob, got {kind}")
-        # float64 since the fractional-weight fix; pre-fix uint64 blobs are
-        # value-preserving through this cast (cell mass < 2^53)
+        check_domain(kind, header)
+        # the table's dtype travels in the frame: cells are float64, and an
+        # integer table reads value-preserving (cell mass < 2^53)
         table = bufs[0].astype(np.float64, copy=False).reshape(header["d"], header["w"])
         return CmsState(header["d"], header["w"], table, header["n"])
 

@@ -15,7 +15,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from ..hashing import hash64
+from ..hashing import HASH_DOMAIN, check_domain, hash64
 from .protocol import pack_state, unpack_state
 
 __all__ = ["HllState", "Hll", "HLL"]
@@ -108,15 +108,17 @@ class Hll:
         if nnz * 5 < (1 << state.p):
             idx = np.nonzero(state.registers)[0].astype(np.int32)
             return pack_state(self.name,
-                              {"p": state.p, "n": state.n_updates, "enc": "s"},
+                              {"p": state.p, "n": state.n_updates, "enc": "s",
+                               "hd": HASH_DOMAIN},
                               [idx, state.registers[idx]])
-        return pack_state(self.name, {"p": state.p, "n": state.n_updates},
-                          [state.registers])
+        return pack_state(self.name, {"p": state.p, "n": state.n_updates,
+                                      "hd": HASH_DOMAIN}, [state.registers])
 
     def deserialize(self, data: bytes) -> HllState:
         kind, header, bufs = unpack_state(data)
         if kind != self.name:
             raise ValueError(f"expected hll blob, got {kind}")
+        check_domain(kind, header)
         if header.get("enc") == "s":
             regs = np.zeros(1 << header["p"], np.uint8)
             regs[bufs[0]] = bufs[1].astype(np.uint8, copy=False)

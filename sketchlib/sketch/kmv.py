@@ -28,7 +28,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from ..hashing import hash64
+from ..hashing import HASH_DOMAIN, check_domain, hash64
 from .protocol import decode_keys, encode_keys, pack_state, unpack_state
 
 __all__ = ["KmvState", "Kmv", "KMV"]
@@ -156,13 +156,14 @@ class Kmv:
 
     def serialize(self, state: KmvState) -> bytes:
         header = {"k": state.k, "n": state.n_total,
-                  "keys": encode_keys(state.keys)}
+                  "keys": encode_keys(state.keys), "hd": HASH_DOMAIN}
         return pack_state(self.name, header, [state.prios])
 
     def deserialize(self, data: bytes) -> KmvState:
         kind, header, bufs = unpack_state(data)
         if kind != self.name:
             raise ValueError(f"expected kmv blob, got {kind}")
+        check_domain(kind, header)
         return KmvState(header["k"], bufs[0].astype(np.uint64, copy=False),
                         decode_keys(header["keys"]), header["n"])
 

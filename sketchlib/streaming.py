@@ -32,6 +32,15 @@ __all__ = ["StreamingSketch", "StreamingGroupedSketch",
            "stateful_grouped_sketch"]
 
 
+def _check_state(spec: SketchSpec, blob: bytes, path: str) -> None:
+    """Resume only from a state the kernel accepts: one from an older
+    layout or hash domain is refused now, before a batch is folded."""
+    try:
+        spec.ops.deserialize(blob)
+    except ValueError as e:
+        raise ValueError(f"state at {path}: {e}") from None
+
+
 def stateful_grouped_sketch(stream_df: DataFrame, group_cols: list[str],
                             value_col: str, spec: SketchSpec,
                             output_mode: str = "update") -> DataFrame:
@@ -127,6 +136,7 @@ class StreamingSketch:
                 raise ValueError(f"state at {self._path} was written for a "
                                  f"different sketch spec")
             self._state_bytes = bytes.fromhex(raw["state_hex"])
+            _check_state(self.spec, self._state_bytes, self._path)
             self.n_rows = raw["n_rows"]
             self.last_batch_id = raw["last_batch_id"]
             self.batches = raw["batches"]
@@ -220,6 +230,8 @@ class StreamingGroupedSketch:
             self.groups = {k: {"state": bytes.fromhex(v["state_hex"]),
                                "n": v["n"]}
                            for k, v in raw["groups"].items()}
+            for v in self.groups.values():
+                _check_state(self.spec, v["state"], self._path)
             self.last_batch_id = raw["last_batch_id"]
         else:
             self.groups = {}

@@ -167,6 +167,62 @@ def test_sketch_engine_plans_have_no_pandas_stage(spark, sf_test, tmp_path,
         assert not pandas_udf.search(plan), plan
 
 
+def _plan_nodes(plan):
+    """Every node of a JVM (logical or physical) plan tree."""
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_keys_hashed_once_in_the_jvm(spark, monkeypatch):
+    """Bloom(url) + HLL(url) plan ONE xxhash64 of url, and the partial
+    builder's Arrow input is that bigint plus one column of x for the two
+    value sketches: no string column crosses to Python.  The broadcast probe over a string column
+    also receives the bigint hash (its raw-value argument folds to a
+    constant null)."""
+    from sketchlib.agg import bloom_contains_col, build_sketches, kll_spec
+
+    df = spark.range(2000).select(
+        F.concat(F.lit("https://h.example.com/p/"),
+                 F.col("id").cast("string")).alias("url"),
+        (F.col("id") * 0.5).alias("x"))
+    plans = []
+    frame_cls = type(df)
+    collect = frame_cls.collect
+
+    def recording_collect(d):
+        plans.append(d._jdf.queryExecution().optimizedPlan())
+        return collect(d)
+
+    monkeypatch.setattr(frame_cls, "collect", recording_collect)
+    res = build_sketches(df, [("url", bloom_spec(2000)),
+                              ("x", kll_spec(100)),
+                              ("url", hll_spec(p=12)),
+                              ("x", kll_spec(50))])
+    monkeypatch.undo()
+    builders = [n for p in plans for n in _plan_nodes(p)
+                if n.nodeName() == "MapInArrow"]
+    assert len(builders) == 1
+    assert builders[0].toString().count("xxhash64(") == 1
+    child = builders[0].child()
+    fields = [(f.name(), f.dataType().simpleString())
+              for f in child.schema().fields()]
+    assert fields == [("__h0", "bigint"), ("__k1", "double")], fields
+
+    probe = df.where(bloom_contains_col(spark, res[0].state_bytes,
+                                        F.col("url")))
+    udfs = [n for n in _plan_nodes(probe._jdf.queryExecution().optimizedPlan())
+            if n.nodeName() == "ArrowEvalPython"]
+    assert len(udfs) == 1
+    args = udfs[0].udfs().apply(0).children()
+    types = [(args.apply(i).dataType().simpleString(), args.apply(i).foldable())
+             for i in range(args.size())]
+    assert types[0] == ("bigint", False)
+    assert all(foldable for _, foldable in types[1:]), types
+    assert probe.count() == 2000
+
+
 def test_kmv_negative_priority_rejected(spark, sf_test):
     """Negative priorities would silently reverse the uint64 bottom-k order
     — the partial builder must reject them."""

@@ -104,13 +104,21 @@ class TestCms:
                        weights=np.array([1.0]))
 
     def test_uint64_wire_blob_still_deserializes(self):
-        """Pre-fix CMS blobs carried a uint64 table; the dtype travels in
-        the wire frame and the cast to float64 is value-preserving."""
+        """A uint64 table (the pre-float64 layout) in a frame stamped with
+        the current hash domain: the dtype travels in the wire frame and
+        the cast to float64 is value-preserving.  Without the stamp the
+        blob is from the murmur3 domain and is refused."""
+        from sketchlib.hashing import HASH_DOMAIN
         from sketchlib.sketch.protocol import pack_state
         st = CMS.create(d=3, w=64)
         CMS.update(st, np.arange(100, dtype=np.int64))
+        header = {"d": st.d, "w": st.w, "n": int(st.n_total)}
+        unstamped = pack_state(CMS.name, header,
+                               [st.table.astype(np.uint64).ravel()])
+        with pytest.raises(ValueError, match="rebuild"):
+            CMS.deserialize(unstamped)
         old_blob = pack_state(
-            CMS.name, {"d": st.d, "w": st.w, "n": int(st.n_total)},
+            CMS.name, {**header, "hd": HASH_DOMAIN},
             [st.table.astype(np.uint64).ravel()])
         back = CMS.deserialize(old_blob)
         assert back.table.dtype == np.float64

@@ -5,7 +5,6 @@ partial-build fast path."""
 
 import contextlib
 import io
-import re
 
 from pyspark.sql import functions as F
 
@@ -118,11 +117,11 @@ def test_weighted_cms_partials_zero_shuffle(spark, sf_test):
 
 def test_sketch_engine_plans_have_no_pandas_stage(spark, sf_test, tmp_path,
                                                   monkeypatch):
-    """Values reach the kernels only through Arrow: no MapInPandas, no
-    FlatMapGroupsInPandas and no pandas scalar UDF (ArrowEvalPython with
-    the SQL_SCALAR_PANDAS_UDF eval type) anywhere in the sketch engine's
-    plans — builds, grouped builds, keyed checkpoint partials, the routed
-    bank probe and the broadcast probe."""
+    """Values reach the kernels only through Arrow: no pandas operator
+    (MapInPandas, FlatMapGroupsInPandas, ...) and no pandas scalar UDF
+    (ArrowEvalPython with the SQL_SCALAR_PANDAS_UDF eval type) anywhere in
+    the sketch engine's plans — builds, grouped builds, keyed checkpoint
+    partials, the routed bank probe and the broadcast probe."""
     from pyspark.util import PythonEvalType
 
     from sketchlib.agg import (bloom_contains_col, build_partials_keyed,
@@ -135,7 +134,7 @@ def test_sketch_engine_plans_have_no_pandas_stage(spark, sf_test, tmp_path,
     collect = frame_cls.collect
 
     def recording_collect(df):
-        plans.append(plan_of(df, "simple"))
+        plans.append(python_operators(df))
         return collect(df)
 
     monkeypatch.setattr(frame_cls, "collect", recording_collect)
@@ -143,28 +142,52 @@ def test_sketch_engine_plans_have_no_pandas_stage(spark, sf_test, tmp_path,
                               ("user_id", hll_spec(p=12))],
                          num_shards=4, fanout=2)
     monkeypatch.undo()
-    assert any("MapInArrow" in p and "FlatMapGroupsInArrow" in p
-               for p in plans)
+    assert any({"MapInArrow", "FlatMapGroupsInArrow"}
+               <= {n.nodeName() for n in p} for p in plans)
 
     for strategy in ("shuffle", "local_combine"):
-        plans.append(plan_of(sketch_grouped(ev, ["event_type"], "user_id",
-                                            hll_spec(p=12),
-                                            strategy=strategy), "simple"))
-    plans.append(plan_of(build_partials_keyed(ev, "user_id", hll_spec(p=12),
-                                              ["user_id"], 4), "simple"))
+        plans.append(python_operators(sketch_grouped(
+            ev, ["event_type"], "user_id", hll_spec(p=12),
+            strategy=strategy)))
+    plans.append(python_operators(build_partials_keyed(
+        ev, "user_id", hll_spec(p=12), ["user_id"], 4)))
     ckpt = str(tmp_path / "bank")
     checkpointed_build(ev, "user_id", bloom_spec(50_000), route_cols=["user_id"],
                        num_shards=4, ckpt_dir=ckpt, shard_sized=True)
-    plans.append(plan_of(sharded_contains(ev, "user_id", ckpt), "simple"))
-    plans.append(plan_of(ev.where(bloom_contains_col(
-        spark, res[0].state_bytes, F.col("user_id"))), "simple"))
+    plans.append(python_operators(sharded_contains(ev, "user_id", ckpt)))
+    plans.append(python_operators(ev.where(bloom_contains_col(
+        spark, res[0].state_bytes, F.col("user_id")))))
 
-    pandas_udf = re.compile(
-        rf"ArrowEvalPython \[.*\], \[.*\], {PythonEvalType.SQL_SCALAR_PANDAS_UDF}\b")
-    for plan in plans:
-        assert "MapInPandas" not in plan, plan
-        assert "FlatMapGroupsInPandas" not in plan, plan
-        assert not pandas_udf.search(plan), plan
+    pandas_udf = PythonEvalType.SQL_SCALAR_PANDAS_UDF
+    for ops in plans:
+        for op in ops:
+            assert "Pandas" not in op.nodeName(), op.toString()
+            assert not (op.nodeName() == "ArrowEvalPython"
+                        and op.evalType() == pandas_udf), op.toString()
+
+
+def test_bank_probe_is_one_cogroup_and_state_reads_run_no_python(
+        spark, sf_test, tmp_path):
+    """The routed bank probe has ONE Python operator, a cogroup of each
+    shard's probe rows with its committed blob, and its probe side carries
+    no blob (a join would copy the shard's blob onto every probe row).
+    Selecting the committed blobs runs no Python and broadcasts nothing."""
+    from sketchlib.checkpoint import (_committed_states, checkpointed_build,
+                                      load_manifest, sharded_contains)
+
+    ev = spark.read.parquet(f"{sf_test}/events.parquet")
+    ckpt = str(tmp_path / "bank")
+    checkpointed_build(ev, "user_id", bloom_spec(50_000),
+                       route_cols=["user_id"], num_shards=4, ckpt_dir=ckpt,
+                       shard_sized=True)
+    probe = python_operators(sharded_contains(ev, "user_id", ckpt))
+    assert [op.nodeName() for op in probe] == ["FlatMapCoGroupsInArrow"]
+    probe_side = list(probe[0].left().schema().fieldNames())
+    assert "__h" in probe_side and "state" not in probe_side, probe_side
+
+    committed = _committed_states(spark, ckpt, load_manifest(ckpt))
+    assert python_operators(committed) == []
+    assert "BroadcastExchange" not in plan_of(committed, "simple")
 
 
 def _plan_nodes(plan):
@@ -173,6 +196,15 @@ def _plan_nodes(plan):
     kids = plan.children()
     for i in range(kids.size()):
         yield from _plan_nodes(kids.apply(i))
+
+
+def python_operators(df) -> list:
+    """The Python operators of ``df``'s physical plan (MapInArrow,
+    FlatMapGroupsInArrow, FlatMapCoGroupsInArrow, ArrowEvalPython, ...) as
+    JVM plan nodes: each one is a stage that ships rows to Python workers."""
+    return [n for n in _plan_nodes(df._jdf.queryExecution().sparkPlan())
+            if n.getClass().getName().startswith(
+                "org.apache.spark.sql.execution.python.")]
 
 
 def test_keys_hashed_once_in_the_jvm(spark, monkeypatch):

@@ -16,4 +16,11 @@ Layers:
   sketchlib.checkpoint— resumable per-shard sketch builds + lineage
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+if "pyspark.worker" in sys.modules:  # only inside a PySpark Python worker
+    from sketchlib import _worker
+
+    _worker.install()

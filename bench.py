@@ -150,7 +150,7 @@ def grouped_state_bytes(spark, sf_dir: str) -> dict:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     hours = sketch_grouped(
         ev.withColumn("hour", F.date_trunc("hour", F.col("ts"))),
-        ["hour"], "user_id", hll_spec(p=13), strategy="local_combine")
+        ["hour"], "user_id", hll_spec(p=13))
     row = hours.select(F.sum(F.octet_length("state")).alias("b"),
                        F.count("*").alias("g")).collect()[0]
     return {"hourly_hll_groups": int(row["g"]),

@@ -11,8 +11,9 @@ the sf-dir-derived table with --sf-dir):
   2. sketches   Bloom(url) + HLL(url) + CMS(host_id) + KLL(n_chars)
                 + t-digest(n_chars): partial build per partition, log-depth
                 tree merge (the north_rule pipeline)
-  3. grouped    per-host distinct-url HLL through the salted two-phase path
-                (host 0 holds 40% of pages — the skew this defuses)
+  3. grouped    per-host distinct-url HLL through the map-side grouped
+                build (host 0 holds 40% of pages: each partition folds its
+                share of the hot host, no raw-row shuffle)
 
 Emits ONE JSON line: per-stage seconds, rows, and pipeline rows/sec
 (session startup and worker warmup excluded — the scaling criterion
@@ -51,7 +52,6 @@ def main() -> None:
                          "N vs 4N comparison)")
     ap.add_argument("--partitions", type=int, default=None,
                     help="input partitions (default 3x parallelism)")
-    ap.add_argument("--salt-buckets", type=int, default=8)
     ap.add_argument("--checkpoint-dir", default=None,
                     help="make the Bloom build resumable at this path. "
                          "With --reps > 1 each rep gets a fresh rep{k}/ "
@@ -253,11 +253,9 @@ def main() -> None:
                     import shutil       # are extracted, reclaim the disk
                     shutil.rmtree(tmp_ck, ignore_errors=True)
 
-            # -- stage 3: per-host HLL via map-side combine (skew path) ----
+            # -- stage 3: per-host HLL via the map-side grouped build ------
             t0 = time.perf_counter()
-            grouped = sketch_grouped(flat, ["host_id"], "url", hll_spec(p=12),
-                                     salt_buckets=args.salt_buckets,
-                                     strategy="local_combine")
+            grouped = sketch_grouped(flat, ["host_id"], "url", hll_spec(p=12))
             n_hosts = grouped.count()
             stages["grouped_hll"] = round(time.perf_counter() - t0, 3)
             metrics["n_hosts"] = n_hosts

@@ -5,8 +5,8 @@ build (SURVEY §3.2, /root/reference/simple_benchmark.cpp:438-539):
 
   reference                      ->  this engine
   -------------------------------------------------------------------
-  pre-partition by key hash      ->  optional repartition (only for skew
-  (simple_benchmark.cpp:450-458)     or shard-count control; sketches are
+  pre-partition by key hash      ->  optional repartition (only for
+  (simple_benchmark.cpp:450-458)     shard-count control; sketches are
                                      set-union algebras, so ANY row
                                      placement is correct — the shuffle
                                      is a balance choice, not a
@@ -23,16 +23,19 @@ Like the reference's one algebra (insert, contains, OR-union,
 bloom.h:279-408) there is one path of each kind: values reach a kernel
 only through ``_arrow_values`` (Arrow validity bitmap, exact int64 — a
 pandas batch would round nullable bigint keys above 2^53); partials come
-only from ``_partial_builder``; states merge only through
-``merge_states`` (executor) and ``_fold`` (driver, ≤ fanout rows); probes
-are one ``F.arrow_udf`` factory, ``_probe_col``.
+only from ``_partial_builder``, per-group partials only from
+``_map_side_combine`` (each partition grouped once, each group folded by
+one ``_update``; a hot group is absorbed where its rows sit, no salted
+raw-row shuffle); states merge only through ``merge_states`` (executor)
+and ``_fold`` (driver, ≤ fanout rows); probes are one ``F.arrow_udf``
+factory, ``_probe_col``.
 
 Keys are hashed once, in the JVM: Bloom, HLL and CMS (``HASHED_KINDS``)
 receive one ``key_hash`` bigint column per distinct key column — Spark's
 ``xxhash64`` of the canonical key, the domain of ``hashing.hash64`` —
 instead of the key (the reference hashes once and reuses the hash for
-routing and insert, simple_benchmark.cpp:246-251).  MG, KMV, KLL and
-t-digest keep receiving values.
+routing and insert, simple_benchmark.cpp:246-251), in whole-column and
+grouped builds alike.  MG, KMV, KLL and t-digest keep receiving values.
 """
 
 from __future__ import annotations
@@ -598,98 +601,73 @@ def grouped_bottomk(df: DataFrame, group_cols: list[str], key_col: str,
 
 
 # ---------------------------------------------------------------------------
-# grouped sketches (one sketch per key) with explicit salting
+# grouped sketches (one sketch per key): one map-side combine per partition
 # ---------------------------------------------------------------------------
 
-def _group_indices(data, cols: list[str]):
-    """Arrow hash grouping of a batch or table on ``cols``: returns
-    ([(key tuple, row indices)] in first-seen order, the grouped key
-    table).  Arrow keeps nullable bigint keys exact, where pandas would
-    promote them to float64 and fold distinct keys above 2^53 together."""
-    t = pa.Table.from_batches([data]) if isinstance(data, pa.RecordBatch) \
-        else data
-    t = t.select(cols).append_column("__i", pa.array(np.arange(t.num_rows)))
+def _group_slices(table: pa.Table, cols: list[str], col: str):
+    """Arrow hash grouping of ``table`` on ``cols``: returns (the grouped
+    key table in first-seen order, per group its rows of column ``col`` in
+    row order).  One ``take`` orders ``col`` by group, then each group is
+    a zero-copy slice.  Arrow keeps nullable bigint keys exact, where
+    pandas would promote them to float64 and fold keys above 2^53."""
+    t = table.select(cols).append_column(
+        "__i", pa.array(np.arange(table.num_rows)))
     g = t.group_by(cols, use_threads=False).aggregate([("__i", "list")])
     lists = g.column("__i_list").combine_chunks()
-    offs, flat = lists.offsets.to_numpy(), lists.flatten().to_numpy()
-    offs = offs - offs[0]
-    keys = zip(*(g.column(c).to_pylist() for c in cols))
-    return ([(k, flat[offs[j]:offs[j + 1]]) for j, k in enumerate(keys)],
-            g.select(cols))
+    vals = table.column(col).combine_chunks().take(lists.flatten())
+    offs = lists.offsets.to_numpy()
+    offs = (offs - offs[0]).tolist()
+    return g.select(cols), [vals.slice(a, b - a)
+                            for a, b in zip(offs, offs[1:])]
 
 
 def _map_side_combine(df: DataFrame, key_cols: list[str], value_col: str,
                       spec: SketchSpec) -> DataFrame:
-    """Map-side combine (mapInArrow, no shuffle of raw rows): each
-    partition folds its ``value_col`` values into one partial per
-    ``key_cols`` value -> (key_cols..., state, n)."""
-    sel = df.select(*key_cols, F.col(value_col).alias("__v"))
+    """The one grouped fold (mapInArrow, no shuffle of raw rows): each
+    task concatenates its partition, groups it once on ``key_cols`` and
+    folds each group with one ``_update`` -> (key_cols..., state, n), one
+    partial per group the partition holds.  The value column crosses as
+    ``_select`` lays it out: the JVM ``key_hash`` for the hashed kinds,
+    values for the others."""
+    inputs = [(value_col, spec)]
+    sel = _select(df, inputs, *key_cols)
+    name = _layout(inputs)[0][1]
+    hashed = spec.kind in HASHED_KINDS
     schema = ", ".join(_ddl(sel, key_cols) + ["state binary", "n long"])
     ops = spec.ops
 
     def combine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict[tuple, list] = {}  # key -> [state, n]
-        firsts = []  # per batch: the key rows first seen in it
-        for rb in batches:
-            groups, keys = _group_indices(rb, key_cols)
-            vals = rb.column("__v")
-            new = []
-            for j, (key, idx) in enumerate(groups):
-                ent = acc.get(key)
-                if ent is None:
-                    ent = acc[key] = [spec.create(), 0]
-                    new.append(j)
-                ent[0], n = _update(spec, ent[0], vals.take(idx))
-                ent[1] += n
-            firsts.append(keys.take(new))
-        if acc:
-            out = _utc(pa.concat_tables(firsts))
-            out = out.append_column("state", pa.array(
-                [ops.serialize(st) for st, _ in acc.values()], pa.binary()))
-            out = out.append_column("n", pa.array(
-                [n for _, n in acc.values()], pa.int64()))
-            yield from out.to_batches()
+        batches = list(batches)
+        if not sum(rb.num_rows for rb in batches):
+            return
+        table = pa.Table.from_batches(batches)
+        keys, groups = _group_slices(table, key_cols, name)
+        states, ns = [], []
+        for vals in groups:
+            state, n = _update(spec, spec.create(), vals, hashed=hashed)
+            states.append(ops.serialize(state))
+            ns.append(n)
+        out = _utc(keys).append_column("state", pa.array(states, pa.binary()))
+        yield from out.append_column("n", pa.array(ns, pa.int64())).to_batches()
 
     return sel.mapInArrow(combine, schema)
 
 
 def sketch_grouped(df: DataFrame, group_cols: list[str], value_col: str,
-                   spec: SketchSpec, salt_buckets: int = 8,
-                   strategy: str = "shuffle") -> DataFrame:
-    """Per-group sketch states with explicit skew handling (AQE's skew
-    splitting does not apply to grouped Python maps).  Both strategies
-    return DataFrame(group_cols..., state binary, n long):
+                   spec: SketchSpec) -> DataFrame:
+    """Per-group sketch states -> DataFrame(group_cols..., state binary,
+    n long).  Each input partition builds one state per group it holds
+    (``_map_side_combine``: no shuffle of raw rows), then ``merge_states``
+    merges the ≤P states per group.  Skew needs no salting: a hot group is
+    folded where its rows already sit, over every partition that holds
+    them.  A one-split input is widened first (the partitioning IS the
+    parallelism).  Fixed-size states (Bloom, CMS) over many groups ship
+    up to P×G full states into the merge."""
+    from .textops import widen
 
-    ``shuffle`` (default) — two-phase SALTED aggregation: phase 1 builds
-    per (group, salt = xxhash64(value) % B) partials, so a hot group fans
-    out over up to B tasks however the input is split; phase 2 merges the
-    ≤B partials per group.  For high group cardinality, where the raw
-    rows must shuffle anyway.
-
-    ``local_combine`` — map-side combine: each input partition builds one
-    state per group it sees (NO shuffle of raw rows), then one groupBy
-    merges ≤P states per group.  At 10^12 rows over ~200 hosts this
-    shuffles P×G blobs instead of 10^12 rows, and skew is a non-issue.
-    """
     gcols = list(group_cols)
-    if strategy == "local_combine":
-        from .textops import widen
-
-        # the input partitioning IS the parallelism: widen a one-split input
-        partials = _map_side_combine(widen(df), gcols, value_col, spec)
-    elif strategy == "shuffle":
-        # salt on the VALUE, not the partition id: a pure data function
-        # (retry-stable) that spreads a hot group even from one split
-        salted = df.select(*gcols, F.col(value_col).alias("__v")) \
-            .withColumn("__salt", F.pmod(F.xxhash64("__v", F.lit(29)),
-                                         F.lit(salt_buckets)).cast("int"))
-        # each (group, salt) bucket lands wholly in one partition, so one
-        # combine pass per partition builds complete bucket states
-        partials = _map_side_combine(salted.repartition(*gcols, "__salt"),
-                                     [*gcols, "__salt"], "__v", spec)
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
-    return merge_states(partials, gcols, spec)
+    return merge_states(_map_side_combine(widen(df), gcols, value_col, spec),
+                        gcols, spec)
 
 
 def rollup_states(states: DataFrame, coarse_cols: list[str],
@@ -737,10 +715,8 @@ def sketch_grouped_rollup(df: DataFrame, fine_cols: list[str],
     partials = _map_side_combine(widen(df), [*fcols, *ccols], value_col, spec)
 
     def merge_coarse(table):
-        groups, _ = _group_indices(table, fcols)
-        blobs = table.column("state")
-        fine = [_merge_blobs(ops, blobs.take(idx).to_pylist())
-                for _, idx in groups]
+        _, blobs = _group_slices(table, fcols, "state")
+        fine = [_merge_blobs(ops, b.to_pylist()) for b in blobs]
         return _one_row(table, ccols, ops.serialize(reduce(ops.merge, fine)),
                         sum(table.column("n").to_pylist()),
                         fine_groups=len(fine))

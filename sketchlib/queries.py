@@ -279,7 +279,7 @@ def bloom_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# HLL: approximate distinct counts, global + grouped (salted)
+# HLL: approximate distinct counts, global + grouped
 # ---------------------------------------------------------------------------
 
 @register("hll_partkey", """
@@ -300,14 +300,13 @@ SELECT event_type, COUNT(DISTINCT user_id)::BIGINT AS exact_users, TRUE AS ok
 FROM events GROUP BY event_type
 """)
 def hll_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group HLL via the two-phase salted aggregation path.  Bound
+    """Per-group HLL via the map-side grouped build.  Bound
     check is the scale-shape pattern (kll_doclen_by_lang): only the tiny
     per-group estimates reach the driver, then ONE distributed exact pass
     joins them back broadcast — no per-group jobs, no exact-counts
     collect."""
     ev = _t(spark, sf_dir, "events")
-    grouped = sketch_grouped(ev, ["event_type"], "user_id", hll_spec(p=13),
-                             salt_buckets=8)
+    grouped = sketch_grouped(ev, ["event_type"], "user_id", hll_spec(p=13))
     ests = [(r["event_type"],
              float(HLL.cardinality(HLL.deserialize(bytes(r["state"])))))
             for r in grouped.collect()]  # one tiny row per group
@@ -502,13 +501,13 @@ GROUP BY l_returnflag
 """)
 def kll_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-GROUP quantiles: one KLL sketch per l_returnflag through the
-    salted two-phase aggregation; each group's median is rank-checked
+    map-side grouped build; each group's median is rank-checked
     against its own exact distribution — tiny medians broadcast into ONE
     grouped rank pass (the kll_doclen_by_lang pattern), not a count() job
     per group."""
     li = _t(spark, sf_dir, "lineitem")
     grouped = sketch_grouped(li, ["l_returnflag"], "l_extendedprice",
-                             kll_spec(k=200), salt_buckets=8)
+                             kll_spec(k=200))
     meds = [(r["l_returnflag"],
              float(KLL.quantile(KLL.deserialize(bytes(r["state"])), [0.5])[0]))
             for r in grouped.collect()]  # one tiny row per flag
@@ -598,7 +597,7 @@ def hll_rollup_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     hours = sketch_grouped(
         ev.withColumn("hour", F.date_trunc("hour", F.col("ts"))),
-        ["hour"], "user_id", hll_spec(p=13), strategy="local_combine")
+        ["hour"], "user_id", hll_spec(p=13))
     # roll hourly states up to days EXECUTOR-side (one blob shuffle, no
     # raw-row rescan, nothing on the driver until the 30 gate rows)
     days = rollup_states(
@@ -1457,13 +1456,13 @@ FROM webpages GROUP BY host_id
 """)
 def webtext_host_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host distinct-url counts on the deliberately skewed host column
-    (host 0 = 40% of pages) through the salted two-phase HLL path — the
-    north_rule's host-domain-skew defusal, gated against exact counts.
+    (host 0 = 40% of pages) through the map-side grouped HLL build, which
+    folds the hot host where its rows sit (no raw-row shuffle to one
+    task), gated against exact counts.
     Tiny estimates broadcast back into ONE distributed exact pass (no
     per-group jobs, no exact-counts collect)."""
     wp = webpages(spark, sf_dir)
-    grouped = sketch_grouped(wp, ["host_id"], "url", hll_spec(p=13),
-                             salt_buckets=8)
+    grouped = sketch_grouped(wp, ["host_id"], "url", hll_spec(p=13))
     ests = [(int(r["host_id"]),
              float(HLL.cardinality(HLL.deserialize(bytes(r["state"])))))
             for r in grouped.collect()]  # one tiny row per host

@@ -198,8 +198,7 @@ class StreamingSketch:
 class StreamingGroupedSketch:
     """One sketch PER GROUP over a stream (e.g. distinct users per
     event-time window): each micro-batch runs the distributed grouped
-    build (map-side combine — the only shape that survives high-volume
-    batches), then merges batch states into the running per-group table.
+    build (map-side combine: no raw-row shuffle), then merges batch states into the running per-group table.
 
     Group keys can be event-time windows (pass a window/bucket expression
     as a group column): late rows merge into their window's sketch
@@ -259,7 +258,7 @@ class StreamingGroupedSketch:
             return
         ops = self.spec.ops
         rows = sketch_grouped(batch_df, self.group_cols, self.value_col,
-                              self.spec, strategy="local_combine").collect()
+                              self.spec).collect()
         for r in rows:
             k = self._key(r, self.group_cols)
             blob = bytes(r["state"])

@@ -9,8 +9,8 @@ pipeline being measured and every run at every parallelism level sees the
 identical logical table (seeded, integer-only derivations).
 
 Skew matches webtext.py's crawl model: host 0 owns 40% of pages, the rest
-spread over 199 hosts — the Zipf head the salted aggregation path exists
-to defuse.
+spread over 199 hosts — the Zipf head the grouped build must fold without
+sending it to one task.
 """
 
 from __future__ import annotations

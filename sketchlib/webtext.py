@@ -9,11 +9,11 @@ CTE).  This is the table every webtext_* query and the BENCH pipeline run
 over; at a real 10^12-document scale it would be an Iceberg table with the
 same schema (io_iceberg.py), the derivation standing in for the crawl.
 
-Host-domain skew is built in on purpose (north_rule: "explicit salted
-repartitioning to defuse host-domain skew"): host 0 receives 40% of all
+Host-domain skew is built in on purpose: host 0 receives 40% of all
 pages (doc_id % 5 < 2), the rest spread over ~199 hosts via a
-multiplicative mix — a Zipf-head analogue that makes naive groupBy(host)
-melt one task and exercises the salted two-phase aggregation path.
+multiplicative mix — a Zipf-head analogue that makes a naive raw-row
+groupBy(host) melt one task, and that the map-side grouped build
+(``agg.sketch_grouped``) folds where the rows already sit.
 
 The html payload is a fixed template with the text HTML-escaped into
 <article><p>...</p>, so ``extract.extract_text(html) == text``

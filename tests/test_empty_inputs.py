@@ -58,9 +58,6 @@ def test_single_row(spark):
 def test_grouped_over_empty(empty):
     out = sketch_grouped(empty, ["s"], "k", hll_spec(p=10))
     assert out.count() == 0
-    out2 = sketch_grouped(empty, ["s"], "k", hll_spec(p=10),
-                          strategy="local_combine")
-    assert out2.count() == 0
 
 
 def test_checkpoint_over_empty(empty, tmp_path):

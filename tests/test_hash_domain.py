@@ -18,7 +18,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from sketchlib.agg import (bloom_contains_col, bloom_spec, build_sketches,
-                           cms_estimate_col, cms_spec, hll_spec)
+                           cms_estimate_col, cms_spec, hll_spec,
+                           sketch_grouped)
 from sketchlib.checkpoint import checkpointed_build, sharded_contains
 from sketchlib.sketch import BLOOM, CMS, HLL, KINDS
 from sketchlib.streaming import StreamingSketch
@@ -104,6 +105,19 @@ def test_spark_build_matches_driver_update(spark, typ, tmp_path):
         local = spec.ops.update(spec.create(), keys)
         assert r.n_rows == len(keys), spec.kind
         assert r.state_bytes == spec.ops.serialize(local), spec.kind
+
+    # grouped build: the same key_hash, folded per group
+    rows = df.select((F.col("id") % 2).alias("g"), "k").toArrow()
+    by_group = {g: [] for g in (0, 1)}
+    for g, v in zip(rows.column("g").to_pylist(), rows.column("k").to_pylist()):
+        if _is_key(v):
+            by_group[g].append(v)
+    for spec in specs:
+        got = {r["g"]: bytes(r["state"]) for r in sketch_grouped(
+            df.withColumn("g", F.col("id") % 2), ["g"], "k", spec).collect()}
+        assert got == {g: spec.ops.serialize(spec.ops.update(spec.create(), v))
+                       for g, v in by_group.items()}, spec.kind
+
     bloom_bytes, _, cms_bytes = (r.state_bytes for r in res)
     bloom = BLOOM.deserialize(bloom_bytes)
     assert BLOOM.contains(bloom, keys).all()

@@ -242,8 +242,7 @@ class TestHllSparseEncoding:
         df = (spark.range(0, 100_000, 1, 8)
               .withColumn("g", F.col("id") % 1000)
               .withColumn("v", F.col("id")))
-        states = sketch_grouped(df, ["g"], "v", hll_spec(p=13),
-                                strategy="local_combine").collect()
+        states = sketch_grouped(df, ["g"], "v", hll_spec(p=13)).collect()
         total = sum(len(bytes(r["state"])) for r in states)
         dense_total = len(states) * (1 << 13)
         assert total < dense_total / 4  # ~100 elems/group => deeply sparse

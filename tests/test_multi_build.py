@@ -1,6 +1,6 @@
-"""Single-pass multi-sketch build and grouped-aggregation strategies:
-the scan-sharing and shuffle-avoidance paths must produce states
-equivalent to the reference single-sketch pipeline."""
+"""Single-pass multi-sketch build and the grouped build: the
+scan-sharing and shuffle-avoidance paths must produce states equivalent
+to the reference single-sketch pipeline and to the driver's update."""
 
 from pyspark.sql import functions as F
 
@@ -66,47 +66,77 @@ def test_weighted_cms_never_undercounts(spark, sf_smoke):
     assert (est <= truth + eps_n).all()
 
 
-def test_salting_splits_hot_group(spark, sf_test):
-    """The skew mechanism itself: under the salted two-phase strategy, the
-    hot group's rows (host 0 = 40% of all pages) are built by MULTIPLE
-    phase-1 tasks — no single task owns the head of the Zipf curve."""
-    from sketchlib.webtext import webpages
-
-    # coalesce(1): even when the crawl arrives as ONE split, value-hash
-    # salting still fans the hot host out (partition-id salting would not)
-    wp = webpages(spark, sf_test).coalesce(1)
-    sel = wp.select("host_id", F.col("url").alias("__v")) \
-        .withColumn("__salt", F.pmod(F.xxhash64("__v", F.lit(29)), F.lit(8)))
-    phase1_groups = (sel.groupBy("host_id", "__salt").count()
-                     .where(F.col("host_id") == 0).count())
-    assert phase1_groups >= 4  # hot host spread over >= 4 salt buckets
+def _group_values(table, group_col: str, value_col: str) -> dict:
+    """{group: its non-null values} of an Arrow table, in row order."""
+    out = {}
+    for g, v in zip(table.column(group_col).to_pylist(),
+                    table.column(value_col).to_pylist()):
+        vals = out.setdefault(g, [])
+        if v is not None:
+            vals.append(v)
+    return out
 
 
-def test_grouped_strategies_agree(spark, sf_smoke):
-    """local_combine (map-side combine, shuffle states) and shuffle
-    (salted two-phase) must produce identical per-group HLL registers —
-    max-merge is order- and placement-independent."""
+def test_grouped_states_match_driver_update(spark, sf_smoke):
+    """The grouped build hashes keys in the JVM and folds each group of a
+    partition at once; every group's HLL state must equal, byte for byte,
+    the driver's HLL.update over that group's values (register max is
+    placement-independent), and its n must count them."""
     ev = spark.read.parquet(f"{sf_smoke}/events.parquet")
-    a = {r["event_type"]: bytes(r["state"]) for r in
-         sketch_grouped(ev, ["event_type"], "user_id", hll_spec(p=12),
-                        strategy="shuffle").collect()}
-    b = {r["event_type"]: bytes(r["state"]) for r in
-         sketch_grouped(ev, ["event_type"], "user_id", hll_spec(p=12),
-                        strategy="local_combine").collect()}
-    assert a == b
-    # and the estimates stay within the HLL bound
-    exact = {r["event_type"]: r["c"] for r in
-             ev.groupBy("event_type").agg(
-                 F.countDistinct("user_id").alias("c")).collect()}
-    for et, blob in a.items():
-        est = HLL.cardinality(HLL.deserialize(blob))
-        assert abs(est - exact[et]) <= max(5 * 1.04 / (2**12) ** 0.5 * exact[et], 3)
+    spec = hll_spec(p=12)
+    got = {r["event_type"]: (bytes(r["state"]), r["n"]) for r in
+           sketch_grouped(ev, ["event_type"], "user_id", spec).collect()}
+    want = {g: (HLL.serialize(HLL.update(spec.create(), vals)), len(vals))
+            for g, vals in _group_values(
+                ev.select("event_type", "user_id").toArrow(),
+                "event_type", "user_id").items()}
+    assert got == want
+
+
+def test_grouped_builds_fold_multi_batch_partitions(spark, tmp_path):
+    """Regression: a task whose partition arrives as several Arrow batches
+    (a later batch bringing no new group) must fold, not crash, in every
+    grouped entry point — sketch_grouped, sketch_grouped_rollup and
+    StreamingGroupedSketch — and each group's state must equal the
+    driver's HLL.update over that group's values."""
+    import json
+
+    from sketchlib.agg import sketch_grouped_rollup
+    from sketchlib.streaming import StreamingGroupedSketch
+
+    spec = hll_spec(12)
+    df = spark.range(0, 200_000, 1, 1).select(
+        "id", (F.col("id") % 3).alias("g"), (F.col("id") % 6).alias("g6"))
+    want = {g: HLL.serialize(HLL.update(spec.create(), vals)) for g, vals in
+            _group_values(df.toArrow(), "g", "id").items()}
+    assert len(want) == 3
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    # several batches per task whatever the core count (widen splits the
+    # one input split into defaultParallelism partitions)
+    spark.conf.set(conf, "16384")
+    try:
+        grouped = {r["g"]: bytes(r["state"]) for r in
+                   sketch_grouped(df, ["g"], "id", spec).collect()}
+        rolled = {r["g"]: (bytes(r["state"]), r["fine_groups"]) for r in
+                  sketch_grouped_rollup(df, ["g6"], ["g"], "id",
+                                        spec).collect()}
+        ss = StreamingGroupedSketch(spec, str(tmp_path / "gstate"), ["g"],
+                                    "id")
+        ss.process_batch(df, 0)
+    finally:
+        spark.conf.set(conf, old)
+    assert grouped == want
+    assert rolled == {g: (st, 2) for g, st in want.items()}
+    assert {json.loads(k)[0]: v["state"] for k, v in ss.groups.items()} \
+        == {str(g): st for g, st in want.items()}
 
 
 def test_grouped_engine_generalizes_to_new_kinds(spark, sf_smoke):
     """sketch_grouped is spec-generic: per-group KMV (distinct estimate +
     sample) and per-group MG (exact-bound heavy hitters) work through the
-    same salted path the mandated kinds use."""
+    same grouped fold the hashed kinds use."""
     from sketchlib.agg import kmv_spec, mg_spec, sketch_grouped
     from sketchlib.sketch import KMV, MG
 

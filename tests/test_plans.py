@@ -145,10 +145,8 @@ def test_sketch_engine_plans_have_no_pandas_stage(spark, sf_test, tmp_path,
     assert any({"MapInArrow", "FlatMapGroupsInArrow"}
                <= {n.nodeName() for n in p} for p in plans)
 
-    for strategy in ("shuffle", "local_combine"):
-        plans.append(python_operators(sketch_grouped(
-            ev, ["event_type"], "user_id", hll_spec(p=12),
-            strategy=strategy)))
+    plans.append(python_operators(sketch_grouped(
+        ev, ["event_type"], "user_id", hll_spec(p=12))))
     plans.append(python_operators(build_partials_keyed(
         ev, "user_id", hll_spec(p=12), ["user_id"], 4)))
     ckpt = str(tmp_path / "bank")
@@ -253,6 +251,34 @@ def test_keys_hashed_once_in_the_jvm(spark, monkeypatch):
     assert types[0] == ("bigint", False)
     assert all(foldable for _, foldable in types[1:]), types
     assert probe.count() == 2000
+
+
+def test_grouped_build_hashes_in_the_jvm_and_shuffles_no_rows(spark):
+    """The one grouped path: grouped HLL over a string column plans the
+    JVM xxhash64, the map-side combine's Arrow input is that bigint plus
+    the group key (no string crosses to Python), and no Exchange sits
+    below the combine — raw rows never shuffle, only per-group states do."""
+    from sketchlib.agg import sketch_grouped
+
+    parts = spark.sparkContext.defaultParallelism  # widen is then a no-op
+    df = spark.range(0, 4000, 1, parts).select(
+        (F.col("id") % 7).alias("g"),
+        F.concat(F.lit("https://h.example.com/p/"),
+                 F.col("id").cast("string")).alias("url"))
+    grouped = sketch_grouped(df, ["g"], "url", hll_spec(p=12))
+    combines = [n for n in _plan_nodes(
+        grouped._jdf.queryExecution().optimizedPlan())
+        if n.nodeName() == "MapInArrow"]
+    assert len(combines) == 1
+    assert "xxhash64(" in combines[0].toString()
+    fields = [(f.name(), f.dataType().simpleString())
+              for f in combines[0].child().schema().fields()]
+    assert fields == [("__h0", "bigint"), ("g", "bigint")], fields
+
+    above, below = plan_of(grouped, "simple").split("MapInArrow", 1)
+    assert "Exchange" in above  # the state merge's shuffle
+    assert "Exchange" not in below, below
+    assert grouped.count() == 7
 
 
 def test_kmv_negative_priority_rejected(spark, sf_test):

@@ -150,7 +150,7 @@ class TestBloomEndToEnd:
         probed = df.withColumn(
             "hit", bloom_contains_col(spark, res.state_bytes, F.col("payload")))
         assert probed.where(~F.col("hit")).count() == 0
-        # grouped salted strategy over binary values
+        # grouped build over binary values
         from sketchlib.agg import sketch_grouped
         from sketchlib.sketch import HLL
         grouped = sketch_grouped(df, ["g"], "payload", hll_spec(p=12))
@@ -205,7 +205,7 @@ class TestHllEndToEnd:
 
     def test_grouped_distinct_users(self, spark, events):
         grouped = sketch_grouped(events, ["event_type"], "user_id",
-                                 hll_spec(p=12), salt_buckets=4)
+                                 hll_spec(p=12))
         rows = grouped.collect()
         exact = {r["event_type"]: r["cnt"] for r in events.groupBy("event_type")
                  .agg(F.countDistinct("user_id").alias("cnt")).collect()}
@@ -310,14 +310,12 @@ class TestRollupStates:
               .withColumn("fine", F.col("id") % 10_000)
               .withColumn("coarse", F.col("fine") % 50)
               .withColumn("v", F.col("id") % 7_000))
-        fine = sketch_grouped(df, ["fine", "coarse"], "v", spec,
-                              strategy="local_combine")
+        fine = sketch_grouped(df, ["fine", "coarse"], "v", spec)
         assert fine.count() == 10_000
         rolled = {r["coarse"]: (bytes(r["state"]), r["n"])
                   for r in rollup_states(fine, ["coarse"], spec).collect()}
         direct = {r["coarse"]: (bytes(r["state"]), r["n"])
-                  for r in sketch_grouped(df, ["coarse"], "v", spec,
-                                          strategy="local_combine").collect()}
+                  for r in sketch_grouped(df, ["coarse"], "v", spec).collect()}
         assert rolled == direct
 
     def test_fused_rollup_matches_two_call_form(self, spark):
@@ -335,8 +333,7 @@ class TestRollupStates:
         fused = {r["coarse"]: (bytes(r["state"]), r["n"], r["fine_groups"])
                  for r in sketch_grouped_rollup(
                      df, ["fine"], ["coarse"], "v", spec).collect()}
-        fine = sketch_grouped(df, ["fine", "coarse"], "v", spec,
-                              strategy="local_combine")
+        fine = sketch_grouped(df, ["fine", "coarse"], "v", spec)
         two_call = {r["coarse"]: (bytes(r["state"]), r["n"])
                     for r in rollup_states(fine, ["coarse"], spec).collect()}
         assert set(fused) == set(two_call) and len(fused) == 20

@@ -98,8 +98,7 @@ def test_windowed_grouped_stream_equals_batch(spark, sf_smoke, tmp_path):
     q.awaitTermination(120)
 
     want = {str(r["win"]): bytes(r["state"]) for r in
-            sketch_grouped(batch, ["win"], "user_id", spec,
-                           strategy="local_combine").collect()}
+            sketch_grouped(batch, ["win"], "user_id", spec).collect()}
     import json as _json
     got = {_json.loads(k)[0]: v["state"] for k, v in ss.groups.items()}
     assert got == want and len(want) >= 2

@@ -681,7 +681,7 @@ def rollup_states(states: DataFrame, coarse_cols: list[str],
 
 def sketch_grouped_rollup(df: DataFrame, fine_cols: list[str],
                           coarse_cols: list[str], value_col: str,
-                          spec: SketchSpec, fan_out: int = 1) -> DataFrame:
+                          spec: SketchSpec) -> DataFrame:
     """``sketch_grouped(fine) -> rollup_states(coarse)`` fused into ONE
     grouped pass: partials keyed on the FINE grouping shuffle once to
     their coarse group's task, which merges partials -> fine states ->
@@ -692,10 +692,7 @@ def sketch_grouped_rollup(df: DataFrame, fine_cols: list[str],
 
     Returns DataFrame(coarse_cols..., state binary, n long, fine_groups
     int), ``fine_groups`` = distinct fine groups merged per coarse state.
-    Each coarse task holds all P x fan_in partial blobs of its group;
-    ``fan_out=R`` salts the merge on the fine key into R sub-tasks (fine
-    groups still complete inside one), for a second R x G_coarse blob
-    shuffle.
+    Each coarse task holds all P x fan_in partial blobs of its group.
     """
     ops = spec.ops
     fcols, ccols = list(fine_cols), list(coarse_cols)
@@ -705,8 +702,6 @@ def sketch_grouped_rollup(df: DataFrame, fine_cols: list[str],
             f"fine_cols and coarse_cols overlap on {sorted(overlap)}: a "
             "coarse level that IS a fine column needs no rollup — call "
             "sketch_grouped on it, or sketch_grouped + rollup_states")
-    if fan_out < 1:
-        raise ValueError(f"fan_out must be >= 1, got {fan_out}")
     out_schema = ", ".join(_ddl(df, ccols) + ["state binary", "n long",
                                                "fine_groups int"])
 
@@ -721,17 +716,7 @@ def sketch_grouped_rollup(df: DataFrame, fine_cols: list[str],
                         sum(table.column("n").to_pylist()),
                         fine_groups=len(fine))
 
-    if fan_out == 1:
-        return partials.groupBy(*ccols).applyInArrow(merge_coarse, out_schema)
-
-    # salted two-level merge: sub-tasks keyed on (coarse, hash(fine) % R)
-    # hold complete fine groups, so merge_coarse runs unchanged per salt
-    # bucket; a tiny second stage merges the R sub-coarse states.
-    salted = partials.withColumn(
-        "__salt", F.pmod(F.xxhash64(*fcols), F.lit(fan_out)))
-    subs = salted.groupBy(*ccols, "__salt").applyInArrow(merge_coarse,
-                                                         out_schema)
-    return merge_states(subs, ccols, spec)
+    return partials.groupBy(*ccols).applyInArrow(merge_coarse, out_schema)
 
 
 # ---------------------------------------------------------------------------

@@ -20,17 +20,18 @@ Layout under ``ckpt_dir``::
     partials/round=<id>/     # parquet (shard long, state binary, n long),
                              # one new directory per build round
 
-The manifest is committed atomically (tmp + os.replace) AFTER the round's
-parquet write succeeds, so a crash in between leaves at worst orphan
-parquet rows.  The next run ignores them: its round reads back lineage
-from its own directory only, and readers keep one row per shard whose sha
-matches the manifest's (checkpoints written before per-round directories
-hold their rows directly under ``partials/``; readers take both).
+The manifest is committed by ``io_iceberg.commit_json`` (the library's one
+atomic commit, also used by streaming state and the table emulation's
+manifests) AFTER the round's parquet write succeeds, so a crash in between
+leaves at worst orphan parquet rows.  The next run ignores them: its round
+reads back lineage from its own directory only, and readers keep one row
+per shard whose sha matches the manifest's (checkpoints written before
+per-round directories hold their rows directly under ``partials/``;
+readers take both).
 
 At 10^12-document scale the partials directory would be an Iceberg table
-and the manifest an Iceberg snapshot (io_iceberg.py keeps that swap behind
-one interface); the JSON+parquet emulation here has the same semantics:
-append-only data + atomically swapped pointer.
+and the manifest an Iceberg snapshot; the JSON+parquet emulation here has
+the same semantics: append-only data + atomically swapped pointer.
 """
 
 from __future__ import annotations
@@ -50,6 +51,7 @@ from .agg import (PARTIAL_SCHEMA, BuildResult, SketchSpec, _ddl, _fold,
                   _hashes, _kept, _memo_deserialize, _query_hashes, _utc,
                   build_partials_keyed, key_hash, shard_expr, tree_merge)
 from .hashing import HASH_DOMAIN, check_domain
+from .io_iceberg import commit_json
 from .sketch import HASH_DOMAIN_KINDS
 
 __all__ = ["checkpointed_build", "load_manifest", "CheckpointState",
@@ -162,11 +164,7 @@ def load_manifest(ckpt_dir: str) -> CheckpointState | None:
 
 
 def _save_manifest(ckpt_dir: str, state: CheckpointState) -> None:
-    path = os.path.join(ckpt_dir, _MANIFEST)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(state.__dict__, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
+    commit_json(os.path.join(ckpt_dir, _MANIFEST), state.__dict__)
 
 
 def _partials_dir(ckpt_dir: str) -> str:

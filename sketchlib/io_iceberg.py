@@ -16,9 +16,12 @@ for a real catalog is a constructor change, not a pipeline change:
 
 ParquetTableIO emulates Iceberg's core semantics honestly:
 - append-only immutable data files,
-- an atomically-swapped metadata pointer (manifest.json via os.replace),
+- an atomically-swapped metadata pointer (manifest.json via commit_json),
 - snapshot isolation + time travel (each snapshot lists its file set),
 so checkpoint/restart logic developed against it carries over unchanged.
+
+``commit_json`` is the library's one atomic commit: the table manifests
+here, checkpoint manifests and streaming state files all go through it.
 """
 
 from __future__ import annotations
@@ -31,7 +34,19 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["table_io", "TableIO", "ParquetTableIO", "IcebergTableIO",
-           "has_iceberg"]
+           "has_iceberg", "commit_json"]
+
+
+def commit_json(path: str, obj) -> None:
+    """Atomically replace ``path`` with ``obj`` as JSON: write a uniquely
+    named temp file beside it, then rename it over ``path`` (atomic on
+    POSIX).  A reader, or a process restarted after a crash, sees the old
+    file or the new one, never a torn write; a crash before the rename
+    leaves an orphan temp file that no reader opens."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1, sort_keys=True)
+    os.replace(tmp, path)
 
 
 def has_iceberg(spark: SparkSession, catalog: str = "spark_catalog") -> bool:
@@ -110,13 +125,6 @@ class ParquetTableIO:
         with open(path) as f:
             return json.load(f)
 
-    def _commit(self, name: str, manifest: dict) -> None:
-        path = self._manifest_path(name)
-        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, path)  # the atomic metadata swap
-
     def _write_files(self, name: str, df: DataFrame) -> str:
         data_dir = os.path.join(self._dir(name), "data",
                                 uuid.uuid4().hex[:12])
@@ -134,7 +142,7 @@ class ParquetTableIO:
             "snapshot_id": sid, "operation": "overwrite",
             "committed_at": time.time(), "file_dirs": [data_dir],
         })
-        self._commit(name, manifest)
+        commit_json(self._manifest_path(name), manifest)
         return sid
 
     def append(self, name: str, df: DataFrame) -> int:
@@ -146,7 +154,7 @@ class ParquetTableIO:
             "snapshot_id": sid, "operation": "append",
             "committed_at": time.time(), "file_dirs": prev + [data_dir],
         })
-        self._commit(name, manifest)
+        commit_json(self._manifest_path(name), manifest)
         return sid
 
     def read(self, name: str, snapshot_id: int | None = None) -> DataFrame:

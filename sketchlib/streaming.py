@@ -12,10 +12,14 @@ Exactly-once: the committed state file records the last applied batch id;
 a replayed micro-batch (failure/retry semantics of foreachBatch are
 at-least-once) is detected and skipped, so the running sketch never
 double-counts — for Bloom/HLL double-update is harmless (idempotent OR /
-max), but CMS counts and KLL ranks would drift.
+max), but CMS counts and KLL ranks would drift.  The file is committed by
+``io_iceberg.commit_json``, the same atomic swap as checkpoint.py's
+manifest: both persist (state, lineage) snapshots a fresh process can
+continue from.
 
-This is the streaming face of checkpoint.py's batch resume: both persist
-(state, lineage) snapshots a fresh process can continue from.
+One sketch PER GROUP over a stream (e.g. distinct users per event-time
+window) is :func:`stateful_grouped_sketch`: each group's state lives in
+Spark's state store and a micro-batch rewrites only the groups it touched.
 """
 
 from __future__ import annotations
@@ -27,31 +31,22 @@ import time
 from pyspark.sql import DataFrame
 
 from .agg import SketchSpec, build_sketch
+from .io_iceberg import commit_json
 
-__all__ = ["StreamingSketch", "StreamingGroupedSketch",
-           "stateful_grouped_sketch"]
-
-
-def _check_state(spec: SketchSpec, blob: bytes, path: str) -> None:
-    """Resume only from a state the kernel accepts: one from an older
-    layout or hash domain is refused now, before a batch is folded."""
-    try:
-        spec.ops.deserialize(blob)
-    except ValueError as e:
-        raise ValueError(f"state at {path}: {e}") from None
+__all__ = ["StreamingSketch", "stateful_grouped_sketch"]
 
 
 def stateful_grouped_sketch(stream_df: DataFrame, group_cols: list[str],
                             value_col: str, spec: SketchSpec,
                             output_mode: str = "update") -> DataFrame:
     """Per-group sketch over a stream with state in SPARK'S STATE STORE
-    (applyInPandasWithState) — the scale path for high-cardinality group
-    keys, where StreamingGroupedSketch's driver-side state table would not
-    fit: each group's serialized sketch lives in the executor-side,
-    checkpointed state store; replay/exactly-once is Spark's contract, not
-    ours.  Emits one (group..., state, n) row per updated group per
-    micro-batch; downstream either keeps the latest row per group or
-    treats rows as a changelog.
+    (applyInPandasWithState): each group's serialized sketch lives in the
+    executor-side, checkpointed state store, keyed by the group's typed
+    values (a null key and the string "None" are two groups), so nothing
+    per group is held on the driver; replay/exactly-once is Spark's
+    contract, not ours.  Emits one (group..., state, n) row per updated
+    group per micro-batch; downstream either keeps the latest row per
+    group (max n) or treats rows as a changelog.
 
     Late/out-of-order rows are a non-event: update folds them into the
     group's running state whenever they arrive (the monoid property —
@@ -84,9 +79,10 @@ def stateful_grouped_sketch(stream_df: DataFrame, group_cols: list[str],
             vals = _arrow_values(pa.Array.from_pandas(pdf[value_col]))
             st = ops.update(st, vals)
             n += len(vals)
-        state.update((ops.serialize(st), n))
+        blob = ops.serialize(st)
+        state.update((blob, n))
         row = {c: [key[i]] for i, c in enumerate(gcols)}
-        row["state"] = [ops.serialize(st)]
+        row["state"] = [blob]
         row["n"] = [n]
         yield pd.DataFrame(row)
 
@@ -136,7 +132,12 @@ class StreamingSketch:
                 raise ValueError(f"state at {self._path} was written for a "
                                  f"different sketch spec")
             self._state_bytes = bytes.fromhex(raw["state_hex"])
-            _check_state(self.spec, self._state_bytes, self._path)
+            # resume only from a state the kernel accepts: one from an
+            # older layout or hash domain is refused before a batch folds
+            try:
+                self.spec.ops.deserialize(self._state_bytes)
+            except ValueError as e:
+                raise ValueError(f"state at {self._path}: {e}") from None
             self.n_rows = raw["n_rows"]
             self.last_batch_id = raw["last_batch_id"]
             self.batches = raw["batches"]
@@ -149,17 +150,14 @@ class StreamingSketch:
             self.batches_total = 0
 
     def _commit(self) -> None:
-        tmp = self._path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({
-                "kind": self.spec.kind, "cfg": dict(self.spec.cfg),
-                "state_hex": self._state_bytes.hex(),
-                "n_rows": self.n_rows,
-                "last_batch_id": self.last_batch_id,
-                "batches": self.batches,
-                "batches_total": self.batches_total,
-            }, f)
-        os.replace(tmp, self._path)
+        commit_json(self._path, {
+            "kind": self.spec.kind, "cfg": dict(self.spec.cfg),
+            "state_hex": self._state_bytes.hex(),
+            "n_rows": self.n_rows,
+            "last_batch_id": self.last_batch_id,
+            "batches": self.batches,
+            "batches_total": self.batches_total,
+        })
 
     # -- the foreachBatch hook -------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -193,87 +191,3 @@ class StreamingSketch:
     @property
     def state_bytes(self) -> bytes:
         return self._state_bytes
-
-
-class StreamingGroupedSketch:
-    """One sketch PER GROUP over a stream (e.g. distinct users per
-    event-time window): each micro-batch runs the distributed grouped
-    build (map-side combine: no raw-row shuffle), then merges batch states into the running per-group table.
-
-    Group keys can be event-time windows (pass a window/bucket expression
-    as a group column): late rows merge into their window's sketch
-    whenever they arrive — the sketch algebra makes out-of-order arrival a
-    non-event, which is why no watermark is needed for correctness (a
-    watermark would only bound state retention; at 10^12 scale add a
-    retention policy that drops windows older than the watermark).
-
-    Exactly-once via the same last-batch-id protocol as StreamingSketch.
-    """
-
-    def __init__(self, spec: SketchSpec, state_dir: str,
-                 group_cols: list[str], value_col: str):
-        self.spec = spec
-        self.group_cols = list(group_cols)
-        self.value_col = value_col
-        self.state_dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
-        self._path = os.path.join(state_dir, "grouped_state.json")
-        self._load()
-
-    def _load(self) -> None:
-        if os.path.exists(self._path):
-            with open(self._path) as f:
-                raw = json.load(f)
-            if raw["kind"] != self.spec.kind or raw["cfg"] != dict(self.spec.cfg):
-                raise ValueError("state written for a different sketch spec")
-            self.groups = {k: {"state": bytes.fromhex(v["state_hex"]),
-                               "n": v["n"]}
-                           for k, v in raw["groups"].items()}
-            for v in self.groups.values():
-                _check_state(self.spec, v["state"], self._path)
-            self.last_batch_id = raw["last_batch_id"]
-        else:
-            self.groups = {}
-            self.last_batch_id = -1
-
-    def _commit(self) -> None:
-        tmp = self._path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({
-                "kind": self.spec.kind, "cfg": dict(self.spec.cfg),
-                "last_batch_id": self.last_batch_id,
-                "groups": {k: {"state_hex": v["state"].hex(), "n": v["n"]}
-                           for k, v in self.groups.items()},
-            }, f)
-        os.replace(tmp, self._path)
-
-    @staticmethod
-    def _key(row, group_cols) -> str:
-        return json.dumps([str(row[c]) for c in group_cols])
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from .agg import sketch_grouped
-
-        if batch_id <= self.last_batch_id:
-            return
-        ops = self.spec.ops
-        rows = sketch_grouped(batch_df, self.group_cols, self.value_col,
-                              self.spec).collect()
-        for r in rows:
-            k = self._key(r, self.group_cols)
-            blob = bytes(r["state"])
-            ent = self.groups.get(k)
-            if ent is None:
-                self.groups[k] = {"state": blob, "n": int(r["n"])}
-            else:
-                merged = ops.merge(ops.deserialize(ent["state"]),
-                                   ops.deserialize(blob))
-                ent["state"] = ops.serialize(merged)
-                ent["n"] += int(r["n"])
-        self.last_batch_id = batch_id
-        self._commit()
-
-    def states(self) -> dict:
-        """{group-key-json: deserialized sketch state}"""
-        ops = self.spec.ops
-        return {k: ops.deserialize(v["state"]) for k, v in self.groups.items()}

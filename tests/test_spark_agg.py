@@ -341,31 +341,10 @@ class TestRollupStates:
             assert (state, n) == two_call[k]
             assert fine_groups == 20  # 400 fine groups over 20 coarse
 
-    def test_fused_rollup_fan_out_matches_unsalted(self, spark):
-        """fan_out=R salts the coarse merge into R sub-tasks (bounding
-        per-task partial concentration for wide fan-ins) but must be a
-        physical change only: HLL register-max is associative/commutative,
-        so states, counts, and the exact fine-group tally are identical."""
-        from sketchlib.agg import sketch_grouped_rollup
-
-        spec = hll_spec(p=8)
-        df = (spark.range(0, 100_000, 1, 16)
-              .withColumn("fine", F.col("id") % 400)
-              .withColumn("coarse", F.col("fine") % 20)
-              .withColumn("v", F.col("id") % 7_000))
-        flat = {r["coarse"]: (bytes(r["state"]), r["n"], r["fine_groups"])
-                for r in sketch_grouped_rollup(
-                    df, ["fine"], ["coarse"], "v", spec).collect()}
-        salted = {r["coarse"]: (bytes(r["state"]), r["n"], r["fine_groups"])
-                  for r in sketch_grouped_rollup(
-                      df, ["fine"], ["coarse"], "v", spec,
-                      fan_out=4).collect()}
-        assert salted == flat and len(salted) == 20
-
     def test_fused_rollup_rejects_bad_args(self, spark):
         """Overlapping fine/coarse columns used to crash deep inside the
-        python worker (duplicate pandas groupby label); now both invalid
-        shapes raise up front on the driver."""
+        python worker (duplicate pandas groupby label); now they raise up
+        front on the driver."""
         from sketchlib.agg import sketch_grouped_rollup
 
         spec = hll_spec(p=8)
@@ -376,9 +355,6 @@ class TestRollupStates:
         with pytest.raises(ValueError, match="overlap.*region"):
             sketch_grouped_rollup(df, ["region", "city"], ["region"],
                                   "v", spec)
-        with pytest.raises(ValueError, match="fan_out"):
-            sketch_grouped_rollup(df, ["city"], ["region"], "v", spec,
-                                  fan_out=0)
 
 
 def test_probe_state_memo_one_deserialize_per_state():

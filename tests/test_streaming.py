@@ -6,8 +6,10 @@ import glob
 import os
 import shutil
 
+import pytest
+
 from sketchlib.agg import build_sketch, hll_spec, cms_spec
-from sketchlib.sketch import HLL
+from sketchlib.sketch import CMS
 from sketchlib.streaming import StreamingSketch
 
 
@@ -72,36 +74,59 @@ def test_stream_resume_after_restart(spark, sf_smoke, tmp_path):
     assert ss2.state_bytes == ss1.state_bytes
 
 
+def _latest_group_rows(spark, stream, group_cols, value_col, spec, ck):
+    """Run stateful_grouped_sketch to a memory sink in update mode; the
+    latest changelog row per group (max n) is that group's state."""
+    import uuid
+
+    from pyspark.sql import Window, functions as F
+
+    from sketchlib.streaming import stateful_grouped_sketch
+
+    name = f"sgs_{uuid.uuid4().hex[:8]}"
+    out = stateful_grouped_sketch(stream, group_cols, value_col, spec)
+    q = (out.writeStream.outputMode("update").format("memory")
+         .queryName(name).option("checkpointLocation", ck)
+         .trigger(availableNow=True).start())
+    q.awaitTermination(300)
+    w = Window.partitionBy(*group_cols).orderBy(F.desc("n"))
+    rows = (spark.table(name).withColumn("__r", F.row_number().over(w))
+            .where("__r = 1").drop("__r").collect())
+    spark.catalog.dropTempView(name)
+    return rows
+
+
 def test_windowed_grouped_stream_equals_batch(spark, sf_smoke, tmp_path):
     """Per-event-time-window distinct users, streamed out of order across
-    micro-batches, must equal the batch grouped build byte-for-byte (HLL
-    max-merge is arrival-order-independent — late data is a non-event)."""
+    micro-batches through the state store, must equal the batch grouped
+    build byte-for-byte in every window (531 hourly windows at sf0.001;
+    HLL max-merge is arrival-order-independent — late data is a
+    non-event).  Group keys keep their types: a null key and the string
+    "None" are two groups."""
     from pyspark.sql import functions as F
 
     from sketchlib.agg import sketch_grouped
-    from sketchlib.streaming import StreamingGroupedSketch
 
     src = _multi_file_copy(spark, sf_smoke, tmp_path)  # order scrambled
     spec = hll_spec(p=12)
-    ss = StreamingGroupedSketch(spec, str(tmp_path / "gstate"),
-                                group_cols=["win"], value_col="user_id")
-
     batch = spark.read.parquet(src) \
         .withColumn("win", F.date_trunc("hour", F.col("ts")))
     stream = (spark.readStream.schema(spark.read.parquet(src).schema)
               .option("maxFilesPerTrigger", 1).parquet(src)
               .withColumn("win", F.date_trunc("hour", F.col("ts"))))
-    q = (stream.writeStream.outputMode("append")
-         .foreachBatch(ss.process_batch)
-         .option("checkpointLocation", str(tmp_path / "gck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    want = {str(r["win"]): bytes(r["state"]) for r in
+    got = {r["win"]: bytes(r["state"]) for r in _latest_group_rows(
+        spark, stream, ["win"], "user_id", spec, str(tmp_path / "gck"))}
+    want = {r["win"]: bytes(r["state"]) for r in
             sketch_grouped(batch, ["win"], "user_id", spec).collect()}
-    import json as _json
-    got = {_json.loads(k)[0]: v["state"] for k, v in ss.groups.items()}
     assert got == want and len(want) >= 2
+
+    keys = str(tmp_path / "keys")
+    spark.createDataFrame([(None, 1), ("None", 2), ("a", 3), (None, 4)],
+                          "g string, v long").write.parquet(keys)
+    stream = spark.readStream.schema("g string, v long").parquet(keys)
+    rows = _latest_group_rows(spark, stream, ["g"], "v", spec,
+                              str(tmp_path / "kck"))
+    assert {r["g"]: r["n"] for r in rows} == {None: 2, "None": 1, "a": 1}
 
 
 def test_replayed_batch_skipped(spark, sf_smoke, tmp_path):
@@ -116,6 +141,49 @@ def test_replayed_batch_skipped(spark, sf_smoke, tmp_path):
     assert ss.n_rows == n_after_first
     ss.process_batch(ev, 1)  # genuinely new batch
     assert ss.n_rows == 2 * n_after_first
+
+
+def test_crash_between_temp_write_and_swap(spark, tmp_path, monkeypatch):
+    """A commit that dies after its temp file is written and before the
+    swap leaves the previous commit in force: a fresh StreamingSketch
+    resumes from it, and the replayed batch id folds into CMS once, so
+    the state equals a clean run's."""
+    keys = [f"https://host{i % 7}.example.com/page/{i:06d}.html"
+            for i in range(200)]
+    b0 = spark.createDataFrame([(k,) for k in keys[:120]], "url string")
+    b1 = spark.createDataFrame([(k,) for k in keys[80:]], "url string")
+    spec = cms_spec(d=3, w=64)
+    state_dir = str(tmp_path / "state")
+    ss = StreamingSketch(spec, state_dir, col="url")
+    ss.process_batch(b0, 0)
+    before = (ss.last_batch_id, ss.n_rows, ss.state_bytes)
+
+    replace = os.replace
+
+    def crash(src, dst):
+        if dst.endswith("sketch_state.json"):
+            raise OSError("killed before the swap")
+        return replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="before the swap"):
+        ss.process_batch(b1, 1)
+    monkeypatch.undo()
+    assert glob.glob(os.path.join(state_dir, "sketch_state.json.*.tmp"))
+
+    resumed = StreamingSketch(spec, state_dir, col="url")
+    assert (resumed.last_batch_id, resumed.n_rows,
+            resumed.state_bytes) == before
+    resumed.process_batch(b1, 1)  # Spark re-delivers the lost batch
+    resumed.process_batch(b1, 1)  # and an at-least-once duplicate
+    # a clean run's state: each batch folded once (a Spark build equals
+    # the driver's update, test_hash_domain.py)
+    clean = CMS.serialize(
+        CMS.update(CMS.update(CMS.create(3, 64), keys[:120]), keys[80:]))
+    assert (resumed.n_rows, resumed.state_bytes) == (240, clean)
+    again = StreamingSketch(spec, state_dir, col="url")
+    assert (again.last_batch_id, again.n_rows, again.state_bytes) \
+        == (1, 240, clean)
 
 
 class TestStatefulGroupedSketch:

@@ -71,8 +71,7 @@ def main() -> None:
         from sketchlib.packaging import ensure_shipped
         ensure_shipped(spark)
         from sketchlib.agg import SketchSpec, bloom_contains_col
-        from sketchlib.checkpoint import (_finalize, checkpointed_build,
-                                          sharded_contains)
+        from sketchlib.checkpoint import _finalize, sharded_contains
 
         spec = SketchSpec(manifest.spec_kind, manifest.spec_cfg)
 

@@ -40,7 +40,6 @@ grouped builds alike.  MG, KMV, KLL and t-digest keep receiving values.
 
 from __future__ import annotations
 
-import hashlib
 import math
 import time
 from dataclasses import dataclass, field
@@ -106,18 +105,15 @@ class SketchSpec:
 
 
 def bloom_spec(expected_n: int, p: float = 0.01, *, blocked: bool = False,
-               block_bits: int | None = None,
                pattern: bool = False) -> SketchSpec:
     """Resolve geometry up front so every partition builds merge-compatible
     states (same m, k regardless of the rows it happens to see).
-    ``block_bits``: 0/None standard, 64 register-blocked (O15), 512
-    cache-line-blocked (O16); ``blocked=True`` is shorthand for 64;
-    ``pattern=True`` is the precomputed-mask patterned mode (O18)."""
+    Standard mode by default; ``blocked=True`` is the register-blocked mode
+    (O15, all k bits in one 64-bit word); ``pattern=True`` is the
+    precomputed-mask patterned mode (O18)."""
     params = BloomParams.from_np(expected_n, p)
     cfg = {"n": expected_n, "p": p, "blocked": blocked,
            "m_bits": params.m_bits, "k": params.k}
-    if block_bits is not None:
-        cfg["block_bits"] = block_bits
     if pattern:
         cfg["pattern"] = True
     return SketchSpec("bloom", cfg)
@@ -489,37 +485,30 @@ class BuildResult:
 
 
 def _build(df: DataFrame, inputs: list, num_shards: int | None = None,
-           fanout: int = 16, collect_lineage: bool = False) -> list[BuildResult]:
+           fanout: int = 16) -> list[BuildResult]:
     """Partials -> tree merge -> driver fold, one BuildResult per input."""
     t0 = time.perf_counter()
     partials, num_partials = _partials(df, inputs, num_shards)
     specs = [spec for _, spec in inputs]
-    lineage: list[dict] = []
-    if collect_lineage:  # every partial reaches the driver: fold them there
-        rows = partials.collect()
-        lineage = [{"shard": r["shard"], "n": r["n"],
-                    "state_sha": hashlib.sha256(bytes(r["state"])).hexdigest()[:16]}
-                   for r in rows]
-    else:
-        rows = tree_merge(partials, specs, num_partials, fanout).collect()
+    rows = tree_merge(partials, specs, num_partials, fanout).collect()
     secs = time.perf_counter() - t0
     results = []
     for i, spec in enumerate(specs):
         state, n_rows = _fold(spec, [r for r in rows if r["idx"] == i])
         results.append(BuildResult(spec, spec.ops.serialize(state), n_rows,
-                                   num_partials, secs, lineage))
+                                   num_partials, secs))
     return results
 
 
 def build_sketch(df: DataFrame, col, spec: SketchSpec, *,
                  num_shards: int | None = None,
-                 fanout: int = 16, collect_lineage: bool = False) -> BuildResult:
+                 fanout: int = 16) -> BuildResult:
     """Full pipeline: partials -> tree merge -> final state on the driver.
     ``col`` is a column name, or a ``(key_col, aux_col)`` pair for the
     kinds that take an auxiliary column: a CMS weight (each key counts its
     weight, e.g. revenue or bytes, instead of 1) or a KMV priority.  Rows
     with a null in either column contribute nothing."""
-    return _build(df, [(col, spec)], num_shards, fanout, collect_lineage)[0]
+    return _build(df, [(col, spec)], num_shards, fanout)[0]
 
 
 def build_sketches(df: DataFrame, cols_specs: list[tuple],

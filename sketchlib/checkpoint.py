@@ -195,7 +195,6 @@ def _shard_spec(spec: SketchSpec, num_shards: int) -> SketchSpec:
     cfg = spec.cfg
     per = max(64, -(-int(cfg["n"] * _SHARD_SIZE_PAD) // num_shards))
     return bloom_spec(per, cfg["p"], blocked=cfg.get("blocked", False),
-                      block_bits=cfg.get("block_bits"),
                       pattern=cfg.get("pattern", False))
 
 

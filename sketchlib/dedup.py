@@ -257,8 +257,7 @@ def verified_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
 
 def simhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text",
-                           max_hamming: int = 3,
-                           hash: str = "hash64") -> DataFrame:
+                           max_hamming: int = 3) -> DataFrame:
     """(a, b, hamming) — SimHash near-dup pairs.  Scale path: block on the
     four 16-bit quarters of the simhash, equi-join per block, then filter
     by exact Hamming distance via bit_count(xor) in the JVM.
@@ -269,14 +268,12 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     recall<1 candidate generator (a pair differing in all four quarters is
     missed) — fine for dedup triage, not for an exactness gate.
 
-    ``hash`` picks the per-token hash: "hash64" (fast custom kernel,
-    production default) or "md5" (simhash_docs_md5 — bit-for-bit
+    The per-token hash is md5 (``simhash_docs_md5``), bit-for-bit
     reproducible in ANSI SQL, which is what lets the DuckDB oracle
-    value-check this whole pipeline)."""
-    from .textops import simhash_docs, simhash_docs_md5
+    value-check this whole pipeline."""
+    from .textops import simhash_docs_md5
 
-    sh = (simhash_docs_md5(df, id_col, text_col) if hash == "md5"
-          else simhash_docs(df, id_col, text_col))
+    sh = simhash_docs_md5(df, id_col, text_col)
     blocks = sh.select(
         F.col(id_col), F.col("simhash"),
         F.posexplode(F.array(*[

@@ -26,6 +26,8 @@ here, checkpoint manifests and streaming state files all go through it.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import json
 import os
 import time
@@ -41,12 +43,16 @@ def commit_json(path: str, obj) -> None:
     """Atomically replace ``path`` with ``obj`` as JSON: write a uniquely
     named temp file beside it, then rename it over ``path`` (atomic on
     POSIX).  A reader, or a process restarted after a crash, sees the old
-    file or the new one, never a torn write; a crash before the rename
-    leaves an orphan temp file that no reader opens."""
+    file or the new one, never a torn write.  A crash before the rename
+    leaves an orphan temp file that no reader opens; each state file has
+    one writer, so the next successful commit removes any such sibling."""
     tmp = f"{path}.{uuid.uuid4().hex}.tmp"
     with open(tmp, "w") as f:
         json.dump(obj, f, indent=1, sort_keys=True)
     os.replace(tmp, path)
+    for orphan in glob.glob(f"{glob.escape(path)}.*.tmp"):
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(orphan)
 
 
 def has_iceberg(spark: SparkSession, catalog: str = "spark_catalog") -> bool:

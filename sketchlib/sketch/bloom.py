@@ -15,15 +15,9 @@ numpy over Arrow batches:
 * contains = AND over k probed bits, vectorized — O6 (branchless like
   bloom.h:337-343).
 
-Also provides the BLOCKED variants via one unified ``block_bits`` knob:
-all k bits of a key confined to one aligned block of the bit array —
-block_bits=64 is the register-blocked mode (O15, gloom.h:285-330 /
-external/bloom_filters.h:183-211: one gather + one scatter per key) and
-block_bits=256/512 is the cache-line-blocked mode (O16,
-external/bloom_filters.h:94-159 uses 256-bit AVX2 blocks; 512 = a full
-64-byte x86 line): one memory transaction per key at DRAM-bound scale,
-with FPP between register-blocked and standard because collisions are
-line-local, not word-local.
+``blocked=True`` is the register-blocked mode (O15, gloom.h:285-330 /
+external/bloom_filters.h:183-211): all k bits of a key confined to one
+64-bit word — one gather + one scatter per key.
 
 ``pattern=True`` is the patterned mode (O18,
 external/bloom_filters.h:354-536 PatternedSimdBloomFilter): instead of
@@ -36,6 +30,14 @@ seeded table regenerated from geometry, so states are merge-compatible
 without shipping the table.  FPP is slightly above register-blocked
 (masks are drawn from 2^10 x 64 variants, not 64-choose-k), which the
 gate accounts for by deriving the expectation from the built state.
+
+Every mode is one addressing step that maps a chunk of hash pairs to
+(word, mask) arrays — [N, k] single-bit masks for standard, [N, 1] k-bit
+masks for blocked and patterned — so insert is one ``bitwise_or.at`` and
+probe is one ``(words[word] & mask) == mask`` for all three.  There is
+no cache-line mode (O16, 256/512-bit blocks): in this numpy lane it is
+slower than standard at both insert and probe and less accurate at the
+same m, so a blob built with one is refused at deserialize.
 """
 
 from __future__ import annotations
@@ -96,8 +98,6 @@ def _pattern_table(k: int) -> np.ndarray:
     (test_bloom_kernel pins golden values)."""
     table = _pattern_tables.get(k)
     if table is None:
-        from ..hashing import splitmix64
-
         n_masks = 1 << _PATTERN_LOG_MASKS
         base = np.uint64(_PATTERN_SEED) ^ (np.uint64(k) << np.uint64(48))
         # one vectorized draw of `attempts` candidate positions per mask;
@@ -142,7 +142,7 @@ class BloomState:
     k: int
     words: np.ndarray  # uint64[m_bits // 64]
     n_inserted: int
-    block_bits: int = 0  # 0 = standard; 64 = register- (O15), 512 = cache-line-blocked (O16)
+    block_bits: int = 0  # 0 = standard; 64 = register-blocked (O15)
     pattern: bool = False  # O18: precomputed-mask mode (implies block_bits=64)
 
     @property
@@ -164,15 +164,9 @@ class Bloom:
     name = "bloom"
 
     def create(self, n: int, p: float = 0.01, *, blocked: bool = False,
-               block_bits: int | None = None, pattern: bool = False,
-               m_bits: int | None = None, k: int | None = None) -> BloomState:
-        if pattern:
-            block_bits = 64  # masks are 64-bit words, one OR per key
-        if block_bits is None:
-            block_bits = 64 if blocked else 0
-        if block_bits not in (0, 64, 256, 512):
-            raise ValueError("block_bits must be 0 (standard), 64 (register) "
-                             "or 256/512 (cache-line block)")
+               pattern: bool = False, m_bits: int | None = None,
+               k: int | None = None) -> BloomState:
+        block_bits = 64 if blocked or pattern else 0  # pattern masks are words
         if m_bits is None or k is None:
             params = BloomParams.from_np(n, p)
             m_bits, k = params.m_bits, params.k
@@ -185,31 +179,35 @@ class Bloom:
         return BloomState(m_bits, k, np.zeros(m_bits // 64, np.uint64), 0,
                           block_bits, pattern)
 
-    # -- index math ---------------------------------------------------------
+    # -- addressing: every mode maps hash pairs to (word, mask) arrays ------
 
-    def _indices(self, state: BloomState, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        """[N, k] flat bit indices via double hashing (O3)."""
+    def _address(self, state: BloomState):
+        """The mode's addressing step, ``(state, c1, c2) -> (word, mask)``."""
+        if state.pattern:
+            return self._pattern_words
+        return self._block_words if state.blocked else self._standard_words
+
+    def _standard_words(self, state: BloomState, c1: np.ndarray,
+                        c2: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Standard addressing: bit i of a key is (h1 + i*h2) mod m via
+        double hashing (O3), as [N, k] word indices and one-bit masks."""
         m = np.uint64(state.m_bits)
         i = np.arange(state.k, dtype=np.uint64)[None, :]
-        return (h1.astype(np.uint64)[:, None] + i * h2.astype(np.uint64)[:, None]) % m
+        idx = (c1.astype(np.uint64)[:, None]
+               + i * c2.astype(np.uint64)[:, None]) % m
+        return idx >> np.uint64(6), np.uint64(1) << (idx & np.uint64(63))
 
     def _block_words(self, state: BloomState, c1: np.ndarray,
                      c2: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Blocked-mode addressing, any block size: all k bits of a key land
-        in ONE aligned block of ``block_bits`` bits.  Returns ([N, wpb] word
-        indices, [N, wpb] OR-combined masks) where wpb = words per block —
-        for block_bits=64 that is the single gather/scatter word of O15;
-        for 512 it is the 8 words of one cache line (O16), still one memory
-        transaction on real hardware."""
-        bb = np.uint64(state.block_bits)
-        wpb = state.block_bits // 64
-        nblocks = np.uint64(state.words.shape[0] // wpb)
+        """Register-blocked addressing (O15): all k bits of a key land in
+        ONE 64-bit word.  Returns ([N, 1] word indices, [N, 1] k-bit masks),
+        the single gather/scatter word per key."""
         u1 = c1.astype(np.uint64)
-        block = u1 % nblocks
+        block = u1 % np.uint64(state.words.shape[0])
         # In-block addressing must be INDEPENDENT of block selection
         # (_BLOCK_LAYOUT_VERSION 2): deriving the base offset from c1 —
         # which also picks the block — pinned every key in a block to one
-        # base whenever gcd(nblocks, bb) was large, collapsing mask
+        # base whenever gcd(nblocks, 64) was large, collapsing mask
         # diversity and blowing FP ~30x past the fill^k model.  The
         # splitmix64 remix of both hashes leaves no trace of c1's low bits.
         with np.errstate(over="ignore"):
@@ -220,22 +218,11 @@ class Bloom:
         # and inflating FPP; odd strides visit k distinct bits
         stride = ((v >> np.uint64(32)) | np.uint64(1))[:, None]
         with np.errstate(over="ignore"):
-            # bb is a power of two, so the uint64 wrap commutes with % bb
-            bit = (v[:, None] + i * stride) % bb  # [N, k]
-        onebit = np.uint64(1) << (bit & np.uint64(63))           # [N, k]
-        if wpb == 1:  # register-blocked: one word, one OR-reduce
-            return (block[:, None],
-                    np.bitwise_or.reduce(onebit, axis=1, keepdims=True))
-        # cache-line mode: route each of the k bits to its word of the line
-        word_in_block = bit >> np.uint64(6)                      # [N, k]
-        word = (block[:, None] * np.uint64(wpb)
-                + np.arange(wpb, dtype=np.uint64)[None, :])      # [N, wpb]
-        mask = np.stack([
-            np.bitwise_or.reduce(
-                np.where(word_in_block == np.uint64(j), onebit, np.uint64(0)),
-                axis=1)
-            for j in range(wpb)], axis=1)                        # [N, wpb]
-        return word, mask
+            # 64 is a power of two, so the uint64 wrap commutes with & 63
+            bit = (v[:, None] + i * stride) & np.uint64(63)  # [N, k]
+        return (block[:, None],
+                np.bitwise_or.reduce(np.uint64(1) << bit, axis=1,
+                                     keepdims=True))
 
     def _pattern_words(self, state: BloomState, c1: np.ndarray,
                        c2: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -256,21 +243,10 @@ class Bloom:
         """Insert from precomputed hash pairs (O5 — lets the caller reuse the
         hash columns it computed for routing, simple_benchmark.cpp:246-251
         pattern)."""
-        if h1.shape[0] == 0:
-            return state
+        address = self._address(state)
         for s in range(0, h1.shape[0], _CHUNK):
-            c1, c2 = h1[s:s + _CHUNK], h2[s:s + _CHUNK]
-            if state.pattern:
-                word, mask = self._pattern_words(state, c1, c2)
-                np.bitwise_or.at(state.words, word, mask)
-            elif state.blocked:
-                word, mask = self._block_words(state, c1, c2)
-                np.bitwise_or.at(state.words, word, mask)
-            else:
-                idx = self._indices(state, c1, c2)
-                word = (idx >> np.uint64(6)).ravel()
-                mask = (np.uint64(1) << (idx & np.uint64(63))).ravel()
-                np.bitwise_or.at(state.words, word, mask)
+            word, mask = address(state, h1[s:s + _CHUNK], h2[s:s + _CHUNK])
+            np.bitwise_or.at(state.words, word, mask)
         state.n_inserted += int(h1.shape[0])
         return state
 
@@ -279,25 +255,12 @@ class Bloom:
         return self.update_hashes(state, h1, h2)
 
     def contains_hashes(self, state: BloomState, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        if h1.shape[0] == 0:
-            return np.zeros(0, bool)
+        address = self._address(state)
         out = np.empty(h1.shape[0], bool)
         for s in range(0, h1.shape[0], _CHUNK):
-            c1, c2 = h1[s:s + _CHUNK], h2[s:s + _CHUNK]
-            if state.pattern:
-                word, mask = self._pattern_words(state, c1, c2)
-                out[s:s + _CHUNK] = np.all(
-                    (state.words[word] & mask) == mask, axis=1)
-            elif state.blocked:
-                word, mask = self._block_words(state, c1, c2)
-                out[s:s + _CHUNK] = np.all(
-                    (state.words[word] & mask) == mask, axis=1)
-            else:
-                idx = self._indices(state, c1, c2)
-                word = idx >> np.uint64(6)
-                bit = idx & np.uint64(63)
-                probed = (state.words[word] >> bit) & np.uint64(1)
-                out[s:s + _CHUNK] = np.all(probed.astype(bool), axis=1)
+            word, mask = address(state, h1[s:s + _CHUNK], h2[s:s + _CHUNK])
+            out[s:s + _CHUNK] = np.all((state.words[word] & mask) == mask,
+                                       axis=1)
         return out
 
     def contains(self, state: BloomState, values) -> np.ndarray:
@@ -351,6 +314,12 @@ class Bloom:
         kind, header, bufs = unpack_state(data)
         if kind != self.name:
             raise ValueError(f"expected bloom blob, got {kind}")
+        bb = header.get("bb", 64 if header["blocked"] else 0)
+        if bb not in (0, 64):
+            raise ValueError(
+                f"Bloom state built with {bb}-bit cache-line blocks; this "
+                "build has no cache-line mode — probing it as 64-bit blocks "
+                "would silently false-negative, rebuild the state")
         if header.get("pat"):
             pv = header.get("pv", 1)  # pre-versioning blobs = v1 table
             if pv != _PATTERN_TABLE_VERSION:
@@ -370,9 +339,7 @@ class Bloom:
         check_domain(kind, header)
         return BloomState(header["m"], header["k"],
                           bufs[0].astype(np.uint64, copy=False),
-                          header["n"],
-                          header.get("bb", 64 if header["blocked"] else 0),
-                          bool(header.get("pat", 0)))
+                          header["n"], bb, bool(header.get("pat", 0)))
 
 
 BLOOM = Bloom()

@@ -16,11 +16,11 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .hashing import hash64, to_byte_matrix
+from .hashing import to_byte_matrix
 
 __all__ = [
     "tokens_col", "shingles_col", "token_stats", "quality_stats",
-    "STOPWORDS", "stopword_count_col", "fingerprint_docs", "simhash_docs",
+    "STOPWORDS", "stopword_count_col", "fingerprint_docs",
     "simhash_docs_md5", "langid_docs", "LANG_PROFILES", "widen",
 ]
 
@@ -145,50 +145,15 @@ def fingerprint_docs(df: DataFrame, id_col: str = "doc_id",
 
 
 # ---------------------------------------------------------------------------
-# simhash (vectorized: explode tokens batch-wide, scatter bit votes)
+# simhash (md5 token hashes from the JVM, per-doc bit votes in numpy)
 # ---------------------------------------------------------------------------
-
-def _simhash_batch(texts: pd.Series) -> np.ndarray:
-    split = texts.fillna("").str.split()
-    counts = split.str.len().to_numpy(np.int64)
-    flat = [t for toks in split for t in toks]
-    ndocs = len(texts)
-    votes = np.zeros((ndocs, 64), np.int64)
-    if flat:
-        h = hash64(flat)
-        doc_idx = np.repeat(np.arange(ndocs), counts)
-        bits = ((h[:, None] >> np.arange(64, dtype=np.uint64)[None, :])
-                & np.uint64(1)).astype(np.int64) * 2 - 1
-        np.add.at(votes, doc_idx, bits)
-    sim = (votes > 0).astype(np.uint64)
-    out = np.zeros(ndocs, np.uint64)
-    for b in range(64):
-        out |= sim[:, b] << np.uint64(b)
-    return out.astype(np.int64)
-
-
-def simhash_docs(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
-    """(id, simhash bigint) — 64-bit SimHash over whitespace tokens; docs
-    with small Hamming distance are near-duplicates."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "simhash": _simhash_batch(pdf[text_col])})
-
-    id_type = dict(df.dtypes)[id_col]
-    return widen(df.select(id_col, text_col)).mapInPandas(
-        run, f"{id_col} {id_type}, simhash long")
-
 
 def simhash_docs_md5(df: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
     """(id, simhash bigint) — simhash whose per-token 64-bit hash is the
     first 16 hex chars of md5(token), a hash BOTH Spark and DuckDB can
     compute — which makes the whole simhash+blocking pipeline value-
-    checkable by a SQL oracle (simhash_docs above uses the faster custom
-    hash64 kernel; the bit-vote/sign/blocking logic is identical).
+    checkable by a SQL oracle.
 
     md5 and the two 32-bit hex chunks are computed JVM-side (Catalyst md5 +
     conv) INSIDE the token array — no explode, no shuffle, the doc's tokens

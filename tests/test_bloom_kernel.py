@@ -128,7 +128,7 @@ class TestBlockedMode:
         n, k = 20_000, 7
         keys = _random_keys(2 * n, seed=11)
         inserted, fresh = keys[:n], keys[n:]
-        st = BLOOM.create(n, 0.01, block_bits=64, m_bits=nblocks * 64, k=k)
+        st = BLOOM.create(n, 0.01, blocked=True, m_bits=nblocks * 64, k=k)
         BLOOM.update(st, inserted)
         assert bool(np.all(BLOOM.contains(st, inserted)))  # no FN, ever
         fp = float(np.mean(BLOOM.contains(st, fresh)))
@@ -168,6 +168,24 @@ class TestBlockedMode:
         with pytest.raises(ValueError, match="block layout v1"):
             BLOOM.deserialize(blob_v1)
 
+    @pytest.mark.parametrize("bb", [256, 512])
+    def test_cache_line_blob_refused(self, bb):
+        """The 256/512-bit cache-line modes are gone; a blob built under
+        one is refused at deserialize with a rebuild message.  Reading its
+        words as 64-bit blocks would probe the wrong bits (silent false
+        negatives)."""
+        import sketchlib.sketch.bloom as bloommod
+
+        words = np.zeros(4 * bb // 64, np.uint64)
+        words[0] = np.uint64(0x81)
+        blob = bloommod.pack_state(
+            BLOOM.name,
+            {"m": 4 * bb, "k": 7, "n": 1, "blocked": 1, "bb": bb, "pat": 0,
+             "hd": bloommod.HASH_DOMAIN,
+             "bkv": bloommod._BLOCK_LAYOUT_VERSION}, [words])
+        with pytest.raises(ValueError, match=f"{bb}-bit cache-line.*rebuild"):
+            BLOOM.deserialize(blob)
+
 
 class TestSerialization:
     def test_roundtrip(self):
@@ -185,52 +203,6 @@ class TestSerialization:
         assert bool(np.all(BLOOM.contains(state, np.arange(500, dtype=np.int64))))
         miss = BLOOM.contains(state, np.arange(10**6, 10**6 + 1000, dtype=np.int64))
         assert float(np.mean(miss)) < 0.05
-
-
-class TestCacheLineBlockedMode:
-    """Cache-line-blocked variant (O16, external/bloom_filters.h:94-159):
-    all k bits inside one 512-bit block.  FPP must sit strictly between
-    standard and register-blocked (line-local beats word-local clustering),
-    with the same no-false-negative guarantee and merge algebra."""
-
-    def test_no_fn_and_fpp_ordering(self):
-        n = 20_000
-        keys = _random_keys(2 * n, seed=11)
-        inserted, fresh = keys[:n], keys[n:]
-
-        def fp_rate(block_bits):
-            st = BLOOM.create(n, 0.01, block_bits=block_bits)
-            BLOOM.update(st, inserted)
-            assert bool(np.all(BLOOM.contains(st, inserted)))
-            return float(np.mean(BLOOM.contains(st, fresh)))
-
-        fp_std, fp_word = fp_rate(0), fp_rate(64)
-        for bb in (256, 512):  # reference uses 256-bit AVX2 blocks
-            fp_line = fp_rate(bb)
-            assert fp_std <= fp_line <= fp_word
-            assert fp_line < 0.03  # far tighter than register-blocked
-
-    def test_merge_and_roundtrip(self):
-        a = BLOOM.create(5_000, 0.01, block_bits=512)
-        b = BLOOM.create(5_000, 0.01, block_bits=512)
-        BLOOM.update(a, np.arange(0, 2_500))
-        BLOOM.update(b, np.arange(2_500, 5_000))
-        merged = BLOOM.deserialize(BLOOM.serialize(BLOOM.merge(a, b)))
-        assert merged.block_bits == 512
-        assert bool(np.all(BLOOM.contains(merged, np.arange(5_000))))
-        import pytest as _pytest
-        with _pytest.raises(ValueError, match="geometry"):
-            BLOOM.merge(a, BLOOM.create(5_000, 0.01, block_bits=64))
-
-    def test_block_confinement(self):
-        """Every key's bits land inside ONE 512-bit block (the whole point:
-        one cache line touched per key)."""
-        st = BLOOM.create(4_000, 0.01, block_bits=512)
-        one = BLOOM.update(BLOOM.create(4_000, 0.01, block_bits=512), [12345])
-        set_words = np.nonzero(one.words)[0]
-        assert len(set_words) >= 1
-        assert set_words.max() // 8 == set_words.min() // 8  # same line
-        assert st.m_bits % 512 == 0
 
 
 class TestPatternedMode:

@@ -287,12 +287,15 @@ class TestTreeMergeTopology:
         assert res.n_rows == 0
         assert HLL.cardinality(res.state) == 0.0
 
-    def test_lineage_collection(self, spark, customer):
+    def test_sharded_partials_and_metrics(self, spark, customer):
         n = customer.count()
-        res = build_sketch(customer, "c_custkey", bloom_spec(n, 0.01),
-                           num_shards=8, collect_lineage=True)
-        assert len(res.shard_lineage) == 8
-        assert sum(s["n"] for s in res.shard_lineage) == n
+        spec = bloom_spec(n, 0.01)
+        parts = build_partials(customer, "c_custkey", spec,
+                               num_shards=8).collect()
+        assert len(parts) == 8
+        assert sum(r["n"] for r in parts) == n
+        res = build_sketch(customer, "c_custkey", spec, num_shards=8)
+        assert res.num_partials == 8 and res.n_rows == n
         m = res.metrics()
         assert m["n_rows"] == n and m["kind"] == "bloom"
 

@@ -146,8 +146,9 @@ def test_replayed_batch_skipped(spark, sf_smoke, tmp_path):
 def test_crash_between_temp_write_and_swap(spark, tmp_path, monkeypatch):
     """A commit that dies after its temp file is written and before the
     swap leaves the previous commit in force: a fresh StreamingSketch
-    resumes from it, and the replayed batch id folds into CMS once, so
-    the state equals a clean run's."""
+    resumes from it, the replayed batch id folds into CMS once, so the
+    state equals a clean run's, and its commit removes the orphan temp
+    file."""
     keys = [f"https://host{i % 7}.example.com/page/{i:06d}.html"
             for i in range(200)]
     b0 = spark.createDataFrame([(k,) for k in keys[:120]], "url string")
@@ -175,6 +176,8 @@ def test_crash_between_temp_write_and_swap(spark, tmp_path, monkeypatch):
     assert (resumed.last_batch_id, resumed.n_rows,
             resumed.state_bytes) == before
     resumed.process_batch(b1, 1)  # Spark re-delivers the lost batch
+    # the next successful commit removes the dead commit's temp file
+    assert not glob.glob(os.path.join(state_dir, "sketch_state.json.*.tmp"))
     resumed.process_batch(b1, 1)  # and an at-least-once duplicate
     # a clean run's state: each batch folded once (a Spark build equals
     # the driver's update, test_hash_domain.py)

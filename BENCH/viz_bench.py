@@ -177,10 +177,11 @@ def _fmt_capacity() -> list[str]:
 
 
 def _fmt_ab_pairs() -> list[str]:
-    """Matched-phase A/B panel: artifacts written by
-    `build_sketches.py --ab-bloom` interleave monolith and bank arms in
-    one session, so each pair's ratio is phase-matched by construction
-    (two separate runs minutes apart are not — their VM phase shifts)."""
+    """Matched-phase A/B panel: artifacts written by the `--ab-bloom`
+    mode of `build_sketches.py` (as of 342aaa3; removed since) interleave
+    monolith and bank arms in one session, so each pair's ratio is
+    phase-matched by construction (two separate runs minutes apart are
+    not — their VM phase shifts)."""
     import glob
     out: list[str] = []
     for p in sorted(glob.glob(os.path.join(_BENCH_DIR, "capacity_*.json"))):

@@ -10,7 +10,9 @@ the sf-dir-derived table with --sf-dir):
                 (must be 0 — the input_hint per-row invariant at scale)
   2. sketches   Bloom(url) + HLL(url) + CMS(host_id) + KLL(n_chars)
                 + t-digest(n_chars): partial build per partition, log-depth
-                tree merge (the north_rule pipeline)
+                tree merge (the north_rule pipeline).  The Bloom is a
+                shard-sized bank once checkpoint.prefer_shard_sized says
+                the monolith outgrows the cache budget, else one filter
   3. grouped    per-host distinct-url HLL through the map-side grouped
                 build (host 0 holds 40% of pages: each partition folds its
                 share of the hot host, no raw-row shuffle)
@@ -27,7 +29,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -58,52 +62,12 @@ def main() -> None:
                          "subdir — a completed checkpoint would be "
                          "resumed (= skipped) by the next rep, silently "
                          "dropping the Bloom cost from its timing")
-    ap.add_argument("--sharded-bloom", type=int, nargs="?", const=-1,
-                    default=None, metavar="S",
-                    help="force the Bloom to a shard-sized bank of S "
-                         "filters (default S = 4x cores), each sized for "
-                         "its own ~n/S keys: the cache-resident, "
-                         "never-merged shape a 10^12-key run uses. "
-                         "Without this flag the mode is AUTO: the bank "
-                         "engages whenever the monolithic bitset "
-                         "outgrows the per-core cache budget "
-                         "(sketchlib.checkpoint.prefer_shard_sized)")
-    ap.add_argument("--monolith-bloom", action="store_true",
-                    help="force the monolithic (mergeable) Bloom even "
-                         "when auto would pick the bank — for A/B "
-                         "capacity comparisons")
-    ap.add_argument("--ab-bloom", action="store_true",
-                    help="interleave monolith and bank pipelines in ONE "
-                         "session (reps ABBA-ordered pairs: mono,bank / "
-                         "bank,mono / ...), with a machine probe after "
-                         "every arm — each pair shares its VM phase, so "
-                         "the per-pair sketch-stage ratio is a matched "
-                         "comparison, and alternating which arm runs "
-                         "first cancels monotonic in-session drift "
-                         "across pairs")
     ap.add_argument("--reps", type=int, default=2,
                 help="timed pipeline repetitions; best-of is reported")
     ap.add_argument("--out", default=None, help="also write the JSON here")
     args = ap.parse_args()
     if args.reps < 1:
-        ap.error("--reps must be >= 1 (0 would run the full warmup, then "
-                 "crash summarizing an empty rep list)")
-    if args.sharded_bloom is not None and args.sharded_bloom != -1 \
-            and args.sharded_bloom < 1:
-        ap.error("--sharded-bloom needs S >= 1 (0 would silently fall "
-                 "through to the monolithic path)")
-    if args.sharded_bloom is not None and args.monolith_bloom:
-        ap.error("--sharded-bloom and --monolith-bloom are mutually "
-                 "exclusive")
-    if args.ab_bloom and (args.sharded_bloom is not None
-                          or args.monolith_bloom or args.checkpoint_dir):
-        ap.error("--ab-bloom runs both modes itself; it is incompatible "
-                 "with --sharded-bloom/--monolith-bloom/--checkpoint-dir")
-    if args.ab_bloom and args.reps % 2:
-        ap.error("--ab-bloom needs an even --reps: pairs alternate "
-                 "mono-first / bank-first (ABBA) so monotonic in-session "
-                 "drift cancels; an odd count leaves one arm running "
-                 "first more often and biases the pooled ratio")
+        ap.error("--reps must be >= 1 (best-of needs one timed rep)")
 
     from pyspark.sql import SparkSession, functions as F
 
@@ -129,6 +93,8 @@ def main() -> None:
         from sketchlib.agg import (bloom_spec, build_sketches, cms_spec,
                                    hll_spec, kll_spec, sketch_grouped,
                                    tdigest_spec)
+        from sketchlib.checkpoint import (ShardedBloomBank, checkpointed_build,
+                                          load_manifest, prefer_shard_sized)
         from sketchlib.extract import extract_project
         from sketchlib.sketch import HLL
 
@@ -144,28 +110,24 @@ def main() -> None:
             return synth_webpages(spark, n_pages_arg, n_words=args.n_words,
                                   partitions=parts)
 
-        def bloom_mode(spec) -> tuple[str, str]:
-            """(mode, reason) for this run's Bloom.  Auto (no flag) defers
-            to checkpoint.prefer_shard_sized: the bank engages once the
-            monolithic m(n) bitset outgrows the per-core cache budget —
-            measured here: insert drops 4.2->2.2 Mkeys/s/core from a 6MB
-            to a 60MB bitset — and is the only shape that exists at
-            10^12 keys.  Below the threshold the monolith keeps the
-            simpler mergeable blob."""
-            from sketchlib.checkpoint import prefer_shard_sized
-            if args.monolith_bloom:
-                return "monolith", "forced by --monolith-bloom"
-            if args.sharded_bloom is not None:
-                return "bank", "forced by --sharded-bloom"
-            m_bytes = spec.cfg["m_bits"] // 8
-            if prefer_shard_sized(spec):
-                return "bank", f"auto: m_bytes={m_bytes} > cache budget"
-            return "monolith", f"auto: m_bytes={m_bytes} fits cache"
+        if args.flat_parquet:
+            flat_in = spark.read.parquet(args.flat_parquet)
+            warm_in = flat_in.limit(20_000)
+            real_n = flat_in.count()
+        else:
+            flat_in = warm_in = None
+            real_n = (make_pages(None).count() if args.sf_dir
+                      else args.pages)
+        # The Bloom shape is the library's call, made once from the REAL
+        # input's row count: a shard-sized bank once the monolithic bitset
+        # outgrows the per-core cache budget.  The warm-up's tiny spec never
+        # crosses that threshold, so it takes the same shape explicitly.
+        bank = prefer_shard_sized(bloom_spec(real_n, 0.01))
 
-        def run_pipeline(pages, flat_input=None, ckpt=None, force_mode=None):
+        def run_pipeline(pages, flat_input=None, ckpt=None):
             """One full pass; returns (stages, metrics, n_pages).
-            ``ckpt``: durable checkpoint dir for this rep (None = use a
-            throwaway temp dir if the bank engages, cleaned up here)."""
+            ``ckpt``: durable checkpoint dir for this rep (None = a
+            throwaway temp dir when the Bloom is checkpointed at all)."""
             stages: dict[str, float] = {}
             metrics: dict[str, object] = {}
 
@@ -194,16 +156,12 @@ def main() -> None:
                           ("host_id", cms_spec(d=5, w=8192)),
                           ("n_chars", kll_spec(k=200)),
                           ("n_chars", tdigest_spec(delta=200))]
-            mode, why = (force_mode, "warmup mirrors real mode") \
-                if force_mode else bloom_mode(bspec)
-            metrics["bloom_mode"], metrics["bloom_mode_reason"] = mode, why
             if ckpt is not None:
                 # a pre-existing manifest (e.g. the same --checkpoint-dir
                 # reused across INVOCATIONS — the per-rep rep{k}/ subdirs
                 # only isolate reps within one run) means this rep resumes
                 # instead of building, so its "sketches" time omits some
                 # or all of the Bloom cost: mark it in the artifact
-                from sketchlib.checkpoint import load_manifest
                 prior = load_manifest(ckpt)
                 if prior is not None:
                     metrics["bloom_resumed"] = True
@@ -215,42 +173,29 @@ def main() -> None:
                               file=sys.stderr)
             tmp_ck = None
             try:
-                if mode == "bank":
-                    import tempfile
-                    from sketchlib.checkpoint import checkpointed_build
-                    s_shards = (args.sharded_bloom
-                                if args.sharded_bloom
-                                and args.sharded_bloom > 0 else 4 * cores)
-                    ck = ckpt
-                    if ck is None:
-                        ck = tmp_ck = tempfile.mkdtemp(prefix="bloombank_")
+                if args.checkpoint_dir or bank:
+                    # resumable Bloom; the other four share one scan
+                    if ckpt is None:
+                        ckpt = tmp_ck = tempfile.mkdtemp(prefix="bloomck_")
                     bloom = checkpointed_build(
                         flat, "url", bspec, route_cols=["url"],
-                        num_shards=s_shards, ckpt_dir=ck, shard_sized=True)
-                    hll, cms, kll, td = build_sketches(
-                        flat, cols_specs[1:], num_shards=args.shards)
-                elif ckpt is not None:
-                    # resumable monolith; the other four share one scan
-                    from sketchlib.checkpoint import checkpointed_build
-                    bloom = checkpointed_build(
-                        flat, "url", bspec, route_cols=["url"],
-                        num_shards=4 * cores, ckpt_dir=ckpt,
-                        shard_sized=False)
+                        num_shards=4 * cores, ckpt_dir=ckpt, shard_sized=bank)
                     hll, cms, kll, td = build_sketches(
                         flat, cols_specs[1:], num_shards=args.shards)
                 else:
                     bloom, hll, cms, kll, td = build_sketches(
                         flat, cols_specs, num_shards=args.shards)
                 stages["sketches"] = round(time.perf_counter() - t0, 3)
+                metrics["bloom_mode"] = ("bank" if isinstance(
+                    bloom, ShardedBloomBank) else "monolith")
                 est = HLL.cardinality(hll.state)
                 metrics["hll_distinct_urls"] = int(est)
                 metrics["hll_rel_err"] = round(abs(est - n_pages) / n_pages,
                                                5)
                 metrics["sketch_metrics"] = [s.metrics() for s in
                                              (bloom, hll, cms, kll, td)]
-            finally:
-                if tmp_ck is not None:  # throwaway bank state: metrics
-                    import shutil       # are extracted, reclaim the disk
+            finally:  # throwaway Bloom state: metrics are extracted
+                if tmp_ck is not None:
                     shutil.rmtree(tmp_ck, ignore_errors=True)
 
             # -- stage 3: per-host HLL via the map-side grouped build ------
@@ -262,58 +207,14 @@ def main() -> None:
             flat.unpersist()
             return stages, metrics, n_pages
 
-        if args.flat_parquet:
-            flat_in = spark.read.parquet(args.flat_parquet)
-            warm_in = flat_in.limit(20_000)
-        else:
-            flat_in = warm_in = None
-
         # Warm the python workers WITH the actual pipeline on a tiny page
         # count: on a long-lived cluster workers/JIT are already hot, and
         # the scaling criterion excludes cluster startup (like JVM boot).
-        # Warmup runs in the mode the real reps will use — a tiny spec
-        # never crosses the auto-bank threshold, so predict the real
-        # run's mode and force it (against a throwaway temp dir, never
-        # the real checkpoint: tiny-spec state would conflict with the
-        # real shard plan).
-        if args.ab_bloom:
-            predicted = "both"
-        elif args.monolith_bloom:
-            predicted = "monolith"
-        elif args.sharded_bloom is not None:
-            predicted = "bank"
-        else:
-            # auto mode: predict from the REAL input's row count (not the
-            # 20k-row warmup sample) so the warmup exercises the same code
-            # path the timed reps will take — a --flat-parquet input big
-            # enough for auto to pick the bank must warm the bank's
-            # checkpoint write/read-back path, not the monolith's
-            if flat_in is not None:
-                real_n = flat_in.count()
-            elif args.sf_dir:
-                real_n = make_pages(None).count()
-            else:
-                real_n = args.pages
-            predicted = bloom_mode(bloom_spec(real_n, 0.01))[0]
-        warm_ck = None
-        if args.checkpoint_dir and predicted != "bank":
-            import shutil
-            import tempfile
-            warm_ck = tempfile.mkdtemp(prefix="warmck_")
-        try:
-            warm_pages = (None if flat_in is not None
-                          else make_pages(min(20_000, args.pages)))
-            if predicted == "both":  # A/B: warm both arms' code paths
-                run_pipeline(warm_pages, flat_input=warm_in,
-                             force_mode="monolith", ckpt=warm_ck)
-                run_pipeline(warm_pages, flat_input=warm_in,
-                             force_mode="bank", ckpt=warm_ck)
-            else:
-                run_pipeline(warm_pages, flat_input=warm_in,
-                             force_mode=predicted, ckpt=warm_ck)
-        finally:
-            if warm_ck is not None:
-                shutil.rmtree(warm_ck, ignore_errors=True)
+        # It checkpoints into a throwaway temp dir, never the real one:
+        # tiny-spec state would conflict with the real shard plan.
+        run_pipeline(None if flat_in is not None
+                     else make_pages(min(20_000, args.pages)),
+                     flat_input=warm_in)
 
         def ckpt_for(rep: int) -> str | None:
             """Durable dir per rep.  reps > 1 get fresh rep{k}/ subdirs:
@@ -326,70 +227,6 @@ def main() -> None:
             return args.checkpoint_dir
 
         pages = None if flat_in is not None else make_pages(args.pages)
-
-        if args.ab_bloom:
-            # Interleaved A/B: each (monolith, bank) pair runs back-to-back
-            # in the same session with a probe after every arm, so the
-            # per-pair sketch-stage ratio is phase-matched by construction.
-            ab_pairs = []
-            metrics: dict[str, object] = {}
-            n_pages = 0
-            for k in range(args.reps):
-                pair = {}
-                # ABBA: alternate which arm runs first so monotonic
-                # in-session drift (measured: the 8 GiB monolith slowed
-                # 42->74->186 s across reps while the bank held) cancels
-                # across pairs instead of biasing every ratio one way
-                order = (("monolith", "bank") if k % 2 == 0
-                         else ("bank", "monolith"))
-                pair["order"] = "->".join(order)
-                for mode in order:
-                    st, m, n_pages = run_pipeline(pages, flat_input=flat_in,
-                                                  force_mode=mode)
-                    pair[mode] = {"stages": st,
-                                  "pipeline_secs": round(sum(st.values()), 3),
-                                  "probe_after": env_probe()}
-                    if mode == "bank" and not metrics:
-                        metrics = m  # bank-arm metrics (bits/item, modes)
-                pair["sketch_win"] = round(
-                    pair["monolith"]["stages"]["sketches"]
-                    / pair["bank"]["stages"]["sketches"], 3)
-                pair["pipeline_win"] = round(
-                    pair["monolith"]["pipeline_secs"]
-                    / pair["bank"]["pipeline_secs"], 3)
-                ab_pairs.append(pair)
-            wins = [p["sketch_win"] for p in ab_pairs]
-            best_bank = min((p["bank"] for p in ab_pairs),
-                            key=lambda a: a["pipeline_secs"])
-            out = {
-                "pages": n_pages,
-                "cores": cores,
-                "env_probe_start": probe_start,
-                "env_probe": env_probe(),
-                "partitions": parts,
-                "reps": args.reps,
-                # headline fields = best bank arm, so capacity views keep
-                # rendering; the matched evidence is ab_pairs
-                "stages": best_bank["stages"],
-                "pipeline_secs": best_bank["pipeline_secs"],
-                "pages_per_sec": round(
-                    n_pages / best_bank["pipeline_secs"], 1),
-                "sketch_rows_per_sec": round(
-                    5 * n_pages / best_bank["stages"]["sketches"], 1),
-                "ab_pairs": ab_pairs,
-                "sketch_win_range": [min(wins), max(wins)],
-                **metrics,
-            }
-            out["bloom_mode"] = "ab"
-            out["bloom_mode_reason"] = ("interleaved monolith/bank pairs; "
-                                        "headline stages = best bank arm")
-            line = json.dumps(out)
-            print(line)
-            if args.out:
-                with open(args.out, "w") as f:
-                    f.write(line + "\n")
-            return
-
         best_stages, metrics, n_pages = run_pipeline(pages,
                                                      flat_input=flat_in,
                                                      ckpt=ckpt_for(0))

@@ -445,17 +445,12 @@ def _committed_states(spark: SparkSession, ckpt_dir: str,
             .dropDuplicates(["shard"]))
 
 
-_TREE_MERGE_MIN_SHARDS = 64
-
-
 def _finalize(spark: SparkSession, spec: SketchSpec, state: CheckpointState,
               ckpt_dir: str) -> BuildResult:
-    """Merge all checkpointed shards into one final sketch.
-
-    Below _TREE_MERGE_MIN_SHARDS the blobs are merged driver-side in
-    deterministic shard order; above it, a log-depth executor-side
-    tree_merge reduces them first so the driver only ever holds <= fanout
-    blobs (round-1 verdict finding #7 — at 4096 shards x 1 MB states the
+    """Merge all checkpointed shards into one final sketch: ``tree_merge``
+    reduces the non-empty shards executor-side (no round runs at its
+    fanout, 16, or fewer), then the driver folds what is left in shard
+    order (round-1 verdict finding #7 — at 4096 shards x 1 MB states the
     sequential driver loop was the bottleneck and memory hazard)."""
     if state.shard_sized:
         raise ValueError("shard-sized bank: shards hold different key "
@@ -468,11 +463,8 @@ def _finalize(spark: SparkSession, spec: SketchSpec, state: CheckpointState,
 
     rows = []
     if have_rows and non_empty:
-        states = _committed_states(spark, ckpt_dir, state)
-        if len(non_empty) > _TREE_MERGE_MIN_SHARDS:
-            states = tree_merge(states, spec, num_partials=state.num_shards,
-                                fanout=16)
-        rows = states.collect()
+        rows = tree_merge(_committed_states(spark, ckpt_dir, state), spec,
+                          len(non_empty)).collect()
     acc, _ = _fold(spec, rows)
 
     n_rows = sum(state.shards[str(s)]["n"] for s in non_empty)

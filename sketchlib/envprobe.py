@@ -33,8 +33,8 @@ an otherwise-idle machine read mt-stream 48.0, 40.3, 4.6, 10.7, 30.7,
 timescale, faster than a multi-minute benchmark run. A single probe
 is therefore a sample, not a state; bracketing (start+end) detects a
 swing only if it persists across the bracket, and comparisons should
-pool multiple interleaved samples (see --ab-bloom in
-jobs/build_sketches.py) rather than trust any one bracketed run.
+pool multiple interleaved samples (see perfbench's interleaved
+parent/change pairs) rather than trust any one bracketed run.
 """
 
 from __future__ import annotations

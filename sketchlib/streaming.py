@@ -52,17 +52,18 @@ def stateful_grouped_sketch(stream_df: DataFrame, group_cols: list[str],
     group's running state whenever they arrive (the monoid property —
     no watermark needed for correctness; add one to bound retention).
 
-    The one pandas stage left in the engine: pyspark has no Arrow variant
-    of applyInPandasWithState, so each group's rows arrive as pandas and
-    re-enter Arrow before the shared value conversion.  Caveat: pandas has
-    already promoted a nullable bigint column that holds a null to
-    float64, so in such a batch keys above 2^53 are rounded before they
-    are hashed — cast such keys to string upstream when that matters."""
+    Each micro-batch's rows are folded first by ``agg._map_side_combine``,
+    the batch builds' one grouped fold (JVM ``key_hash``, Arrow, nulls
+    dropped): one partial (state, n) per group per partition.  The state
+    op then merges those blobs into the stored one and adds up ``n``.  It
+    is the one pandas stage left in the engine (pyspark has no Arrow
+    variant of applyInPandasWithState), but only blobs and counts cross
+    it: values, nullable bigints above 2^53 included, never pass through
+    pandas."""
     import pandas as pd
-    import pyarrow as pa
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .agg import _arrow_values, _ddl
+    from .agg import _ddl, _map_side_combine, _merge_blobs
 
     ops = spec.ops
     gcols = list(group_cols)
@@ -70,23 +71,21 @@ def stateful_grouped_sketch(stream_df: DataFrame, group_cols: list[str],
     state_schema = "state binary, n bigint"
 
     def fold(key, pdfs, state):
+        blobs, n = [], 0
         if state.exists:
             blob, n = state.get
-            st = ops.deserialize(bytes(blob))
-        else:
-            st, n = spec.create(), 0
+            blobs.append(bytes(blob))
         for pdf in pdfs:
-            vals = _arrow_values(pa.Array.from_pandas(pdf[value_col]))
-            st = ops.update(st, vals)
-            n += len(vals)
-        blob = ops.serialize(st)
+            blobs.extend(map(bytes, pdf["state"]))
+            n += int(pdf["n"].sum())
+        blob = ops.serialize(_merge_blobs(ops, blobs))
         state.update((blob, n))
         row = {c: [key[i]] for i, c in enumerate(gcols)}
         row["state"] = [blob]
         row["n"] = [n]
         yield pd.DataFrame(row)
 
-    return (stream_df.select(*gcols, value_col)
+    return (_map_side_combine(stream_df, gcols, value_col, spec)
             .groupBy(*gcols)
             .applyInPandasWithState(fold, out_schema, state_schema,
                                     output_mode,

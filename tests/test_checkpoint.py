@@ -256,9 +256,10 @@ def test_sharded_contains_states_not_broadcast(spark, sf_smoke, tmp_path):
 
 
 def test_finalize_tree_merges_many_shards(spark, sf_smoke, tmp_path):
-    """Above _TREE_MERGE_MIN_SHARDS the finalize path reduces executor-side;
-    the result must match a small-shard-count build of the same data
-    (bloom merge is an OR — byte-identical regardless of shard plan)."""
+    """Above tree_merge's fanout (16) the finalize path reduces
+    executor-side; the result must match a 4-shard build of the same data,
+    which the driver folds directly (bloom merge is an OR —
+    byte-identical regardless of shard plan)."""
     df = _li(spark, sf_smoke)
     spec = bloom_spec(df.count(), 0.01)
     few = checkpointed_build(df, "l_orderkey", spec, route_cols=ROUTE,

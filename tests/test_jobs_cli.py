@@ -1,8 +1,8 @@
 """Argument-contract tests for jobs/build_sketches.py — every rejection
 happens in argparse before a SparkSession exists, so these are
 subprocess-cheap.  The accepted paths are exercised end-to-end by the
-committed capacity artifacts (BENCH/capacity_*_r5.json) and the 60k-page
-A/B smoke."""
+committed capacity artifacts (BENCH/capacity_*_r5.json) and by the
+checkpoint-reuse run below."""
 
 import os
 import subprocess
@@ -17,51 +17,14 @@ def _run(*argv):
                           capture_output=True, text=True, timeout=60)
 
 
-def test_sharded_bloom_zero_rejected():
-    """S=0 used to be falsy and silently fell through to the monolith."""
-    r = _run("--pages", "100", "--sharded-bloom", "0")
-    assert r.returncode == 2
-    assert "S >= 1" in r.stderr
-
-
-def test_sharded_and_monolith_mutually_exclusive():
-    r = _run("--pages", "100", "--sharded-bloom", "--monolith-bloom")
-    assert r.returncode == 2
-    assert "mutually exclusive" in r.stderr
-
-
 def test_reps_below_one_rejected():
-    """--reps 0 used to run the full warmup, then crash with a raw
-    ValueError summarizing an empty rep list (--ab-bloom) or silently
-    behave like 1 (plain mode) — now both reject up front."""
-    for mode in ([], ["--ab-bloom"]):
-        r = _run("--pages", "100", "--reps", "0", *mode)
-        assert r.returncode == 2, mode
-        assert "--reps must be >= 1" in r.stderr, mode
-        r = _run("--pages", "100", "--reps", "-1", *mode)
-        assert r.returncode == 2, mode
-
-
-def test_ab_bloom_rejects_mode_and_checkpoint_flags():
-    """--ab-bloom owns both modes and its own throwaway checkpoints; a
-    forced mode or durable checkpoint dir would break the interleaving."""
-    for extra in (["--monolith-bloom"], ["--sharded-bloom"],
-                  ["--checkpoint-dir", "/tmp/x"]):
-        r = _run("--pages", "100", "--ab-bloom", *extra)
-        assert r.returncode == 2, extra
-        assert "incompatible" in r.stderr, extra
-
-
-def test_ab_bloom_rejects_odd_reps():
-    """An odd rep count silently breaks the ABBA order balance (one arm
-    runs first more often, so monotonic in-session drift no longer
-    cancels) — the artifact would look balanced but carry an order bias."""
-    r = _run("--pages", "100", "--ab-bloom", "--reps", "3")
+    """--reps 0 used to run the full warmup, then silently behave like 1 —
+    it is rejected up front."""
+    r = _run("--pages", "100", "--reps", "0")
     assert r.returncode == 2
-    assert "even --reps" in r.stderr
-    # even reps still parse past argparse (fails later only on data dirs)
-    r = _run("--ab-bloom", "--reps", "2", "--help")
-    assert r.returncode == 0
+    assert "--reps must be >= 1" in r.stderr
+    r = _run("--pages", "100", "--reps", "-1")
+    assert r.returncode == 2
 
 
 def test_reusing_completed_checkpoint_is_marked(tmp_path):
@@ -84,6 +47,7 @@ def test_reusing_completed_checkpoint_is_marked(tmp_path):
 
     first, _ = run_once(str(tmp_path / "r1.json"))
     assert "bloom_resumed" not in first
+    assert first["bloom_mode"] == "monolith"
     second, err = run_once(str(tmp_path / "r2.json"))
     assert second["bloom_resumed"] is True
     assert second["rep_resumed"] == [True]

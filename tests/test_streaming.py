@@ -102,7 +102,8 @@ def test_windowed_grouped_stream_equals_batch(spark, sf_smoke, tmp_path):
     build byte-for-byte in every window (531 hourly windows at sf0.001;
     HLL max-merge is arrival-order-independent — late data is a
     non-event).  Group keys keep their types: a null key and the string
-    "None" are two groups."""
+    "None" are two groups.  Values keep theirs: bigints above 2^53 in a
+    batch that also holds null values hash exactly."""
     from pyspark.sql import functions as F
 
     from sketchlib.agg import sketch_grouped
@@ -120,13 +121,23 @@ def test_windowed_grouped_stream_equals_batch(spark, sf_smoke, tmp_path):
             sketch_grouped(batch, ["win"], "user_id", spec).collect()}
     assert got == want and len(want) >= 2
 
+    # one file: bigints above 2^53 share a batch with null values, which
+    # pandas would promote to float64 (rounding the keys) if values
+    # crossed the pandas stage; "b" holds only a null value (n = 0)
     keys = str(tmp_path / "keys")
-    spark.createDataFrame([(None, 1), ("None", 2), ("a", 3), (None, 4)],
-                          "g string, v long").write.parquet(keys)
+    big = 2 ** 53 + 1
+    spark.createDataFrame(
+        [(None, 1), ("None", 2), ("a", 3), (None, 4), ("a", big),
+         ("a", None), ("None", big + 2), (None, big + 4), (None, None),
+         ("b", None)], "g string, v long").coalesce(1).write.parquet(keys)
     stream = spark.readStream.schema("g string, v long").parquet(keys)
     rows = _latest_group_rows(spark, stream, ["g"], "v", spec,
                               str(tmp_path / "kck"))
-    assert {r["g"]: r["n"] for r in rows} == {None: 2, "None": 1, "a": 1}
+    assert {r["g"]: r["n"] for r in rows} == {None: 3, "None": 2, "a": 2,
+                                              "b": 0}
+    want = {r["g"]: bytes(r["state"]) for r in sketch_grouped(
+        spark.read.parquet(keys), ["g"], "v", spec).collect()}
+    assert {r["g"]: bytes(r["state"]) for r in rows} == want
 
 
 def test_replayed_batch_skipped(spark, sf_smoke, tmp_path):
